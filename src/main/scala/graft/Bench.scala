@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
@@ -16,25 +15,20 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // n=3 by default: round 3→4 ran IDENTICAL code and a single contended
     // run swung individual queries 0.74×–5.3×; medians of 3 are the minimum
     // that survives one bad interleaving. Override via SPARK_GRAFT_BENCH_REPS.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val spark = Engine.local(cpus)
     // shuffle partitions default to the thread count (the committed-
     // artifact config) but are overridable for the scale-gate runs: at
     // sf3/sf10 a fixed 32 leaves multi-GB shuffle partitions that spill —
     // a real deployment sizes partitions to the data (~128 MB targets),
     // which is what SPARK_GRAFT_SHUFFLE models (AQE still coalesces small
     // ones back down, so oversizing is safe; undersizing is not)
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = Engine.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     // steady-state warmup (untimed): touch every table once so file
     // listing, footer reads, and codegen/JIT warm-up don't land on
     // whichever query happens to run first. The counts double as the

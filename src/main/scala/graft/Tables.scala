@@ -20,7 +20,7 @@ object Tables {
     val df = parallelize(spark.read.parquet(s"$dir/$name.parquet"),
       s"$dir/$name.parquet")
     // events.ts is parquet TIMESTAMP(NANOS): Spark reads it as a nanosecond
-    // Long (spark.sql.legacy.parquet.nanosAsLong, set in Engine.configure)
+    // Long (spark.sql.legacy.parquet.nanosAsLong, set in Engine.local)
     // and we FLOOR it to microsecond TimestampType — `div` truncates toward
     // zero, which would disagree with DuckDB's flooring epoch_us by 1µs for
     // pre-epoch (negative) nanosecond timestamps (FIXTURES.md, SURVEY.md §7

@@ -5,9 +5,15 @@ import org.apache.spark.sql.SparkSession
 /** The reference DAG as a driver program (reporting_dag.py:13-183 → plain
   * Scala call graph, SURVEY.md §2A O1/O17): DDL, then per entity
   * extract → stage → watermark-filter → dedup-append. The three Airflow
-  * TaskGroups fan out after `ddl` (reporting_dag.py:178-180); Spark jobs
-  * parallelize internally, so the groups run sequentially here — at scale
-  * they could be three Futures on a FAIR-scheduled session.
+  * TaskGroups fan out after `ddl` (reporting_dag.py:178-180); here `run`
+  * launches the three entity groups as Futures on the global execution
+  * context, so their jobs run concurrently on the shared session, and
+  * waits for them in entity order.
+  *
+  * Groups are not transactional as a set: a failing group does not stop
+  * its siblings, which keep running and commit their loads. `run` rethrows
+  * the first failure it reaches in entity order, possibly while a sibling
+  * is still in flight.
   *
   * Extraction source: reference-shaped JSON array files (the same shape the
   * reference stages to GCS). A live REST mode would paginate the Airflow API

@@ -36,8 +36,27 @@ object PipelineOps {
 
   private val dagRunPk = Schemas.pkOf("dag_run")
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p_reporting_e2e" -> ((s, _) => {
+  /** DuckDB source for the staged dag_run pages. The oracles below replay
+    * the loads over it; reading [[Fixtures.dir]] here materializes the
+    * fixture dir, so the path embedded in oracle_sql.json exists. */
+  private val stagedDagRuns =
+    s"read_json('$fixtureDir/dagRuns*.json', format='array', " +
+      "filename=true, columns={dag_id:'VARCHAR', dag_run_id:'VARCHAR', " +
+      "end_date:'VARCHAR', execution_date:'VARCHAR', " +
+      "external_trigger:'BOOLEAN', logical_date:'VARCHAR', " +
+      "start_date:'VARCHAR', state:'VARCHAR'})"
+
+  /** First (`ASC`) or last (`DESC`) staged file wins per dag run. */
+  private def replay(order: String, cols: String): String =
+    s"""WITH staged AS (
+            SELECT dag_id, dag_run_id, execution_date, state,
+                   row_number() OVER (PARTITION BY dag_id, dag_run_id
+                                      ORDER BY filename $order) AS rn
+            FROM $stagedDagRuns)
+          SELECT $cols FROM staged WHERE rn = 1"""
+
+  val queries: Seq[Query] = Seq(
+    Query("p_reporting_e2e", (s, _) => {
       // fresh state per invocation → deterministic row count
       Catalog.drop(s)
       ReportingPipeline.run(s, fixtureDir)
@@ -45,8 +64,12 @@ object PipelineOps {
       s.table(Catalog.tableName("dag_run"))
         .select("dag_id", "dag_run_id", "execution_date", "state")
         .orderBy(col("dag_id"), col("dag_run_id"))
-    }),
-    "p_upsert_state" -> ((s, _) => {
+    }, oracle = replay("ASC",
+        """dag_id, dag_run_id,
+           CAST(CAST(execution_date AS TIMESTAMPTZ) AT TIME ZONE 'UTC' AS TIMESTAMP)
+             AS execution_date,
+           state""")),
+    Query("p_upsert_state", (s, _) => {
       Catalog.drop(s)
       ReportingPipeline.run(s, fixtureDir)
       // re-extract the full window; the LATER page carries mutated states —
@@ -58,8 +81,8 @@ object PipelineOps {
         preference = Seq(col(Staging.srcFileCol).desc))
       s.table(table).select("dag_id", "dag_run_id", "state")
         .orderBy(col("dag_id"), col("dag_run_id"))
-    }),
-    "p_snapshot_diff" -> ((s, dir) => {
+    }, oracle = replay("DESC", "dag_id, dag_run_id, state")),
+    Query("p_snapshot_diff", (s, dir) => {
       // change-data derivation between two aggregate snapshots of the same
       // source (per-customer activity in two adjacent 2-year windows):
       // I = newly active, D = churned, U = changed stats — the change set
@@ -81,8 +104,29 @@ object PipelineOps {
         snap("1996-01-01 00:00:00", "1998-01-01 00:00:00"),
         snap("1998-01-01 00:00:00", "2000-01-01 00:00:00"),
         Seq("o_custkey"))
-    }),
-    "p_targeted_delete" -> ((s, dir) => {
+    }, oracle =
+      """WITH oldw AS (SELECT o_custkey, count(*) AS n_orders,
+                                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
+                         FROM orders
+                         WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+                           AND o_orderdate < TIMESTAMP '1998-01-01'
+                         GROUP BY 1),
+           neww AS (SELECT o_custkey, count(*) AS n_orders,
+                           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
+                    FROM orders
+                    WHERE o_orderdate >= TIMESTAMP '1998-01-01'
+                      AND o_orderdate < TIMESTAMP '2000-01-01'
+                    GROUP BY 1)
+           SELECT coalesce(o.o_custkey, n.o_custkey) AS o_custkey,
+                  o.n_orders AS n_orders_old, o.spend AS spend_old,
+                  n.n_orders AS n_orders_new, n.spend AS spend_new,
+                  CASE WHEN o.o_custkey IS NULL THEN 'I'
+                       WHEN n.o_custkey IS NULL THEN 'D'
+                       ELSE 'U' END AS op
+           FROM oldw o FULL JOIN neww n ON o.o_custkey = n.o_custkey
+           WHERE o.o_custkey IS NULL OR n.o_custkey IS NULL
+              OR o.n_orders <> n.n_orders OR o.spend <> n.spend"""),
+    Query("p_targeted_delete", (s, dir) => {
       // targeted row ERASURE (the GDPR/right-to-be-forgotten op) on an
       // immutable-format table: deleting user set U rewrites ONLY the
       // partitions that contain U — affected days come from one pruned
@@ -117,8 +161,18 @@ object PipelineOps {
         .agg(cnt(l(1)).as("n_events"),
           sm(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
             .cast("double").as("sum_value"))
-    }),
-    "p_retention" -> ((s, dir) => {
+    }, oracle =
+      // the erased table recomputed from raw events: every row of the
+      // target set gone, everything else byte-identical — equality over
+      // ALL days proves unaffected partitions were never touched
+      """SELECT CAST(ts AS DATE) AS day,
+                  CAST(count(*) AS BIGINT) AS n_events,
+                  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
+                    AS sum_value
+           FROM events
+           WHERE NOT COALESCE(user_id % 97 = 0, FALSE)
+           GROUP BY 1"""),
+    Query("p_retention", (s, dir) => {
       // partition RETENTION — the lifecycle twin of p_partition_overwrite:
       // day partitions older than (earliest day + 10 days) are dropped
       // with metadata-only ALTER TABLE ... DROP PARTITION statements, run
@@ -156,8 +210,17 @@ object PipelineOps {
         .agg(cnt(l(1)).as("n_events"),
           sm(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
             .cast("double").as("sum_value"))
-    }),
-    "p_schema_evolution" -> ((s, dir) => {
+    }, oracle =
+      // survivors = days at or past the cutoff (earliest + 10 days)
+      """WITH ev AS (SELECT event_id, value, CAST(ts AS DATE) AS day
+                       FROM events),
+           c AS (SELECT min(day) + INTERVAL 10 DAY AS cutoff FROM ev)
+           SELECT day, CAST(count(*) AS BIGINT) AS n_events,
+                  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
+                    AS sum_value
+           FROM ev WHERE day >= (SELECT cutoff FROM c)
+           GROUP BY 1"""),
+    Query("p_schema_evolution", (s, dir) => {
       // additive schema DRIFT: batch 1 (even keys) lands with the v1
       // schema, batch 2 (odd keys) arrives carrying a NEW column;
       // mergeSchema unifies the footer schemas at read time and v1 rows
@@ -182,8 +245,16 @@ object PipelineOps {
         .agg(cnt(l(1)).as("n_orders"),
           sm(col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
             .cast("double").as("revenue"))
-    }),
-    "p_partition_overwrite" -> ((s, dir) => {
+    }, oracle =
+      // the drift replayed from the base table: odd keys carry the new
+      // column, even keys are the LEGACY (pre-evolution) bucket
+      """SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority
+                       ELSE 'LEGACY' END AS prio,
+                  count(*) AS n_orders,
+                  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+                    AS revenue
+           FROM orders GROUP BY 1"""),
+    Query("p_partition_overwrite", (s, dir) => {
       // dynamic partition overwrite — the BACKFILL primitive: re-running
       // one day's corrected job replaces exactly that day's partition and
       // touches nothing else (static overwrite mode would truncate the
@@ -226,8 +297,19 @@ object PipelineOps {
         .agg(cnt(l(1)).as("n_events"),
           sm(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
             .cast("double").as("sum_value"))
-    }),
-    "p_backfill" -> ((s, dir) => {
+    }, oracle =
+      // the corrected full recompute: earliest day doubled, all other
+      // days untouched — equality proves the dynamic overwrite replaced
+      // exactly one partition (twice, idempotently)
+      """WITH ev AS (SELECT event_id, value, date_trunc('day', ts) AS day
+                       FROM events),
+           d0 AS (SELECT min(day) AS day0 FROM ev)
+           SELECT day, CAST(count(*) AS BIGINT) AS n_events,
+                  CAST(sum(CAST(CASE WHEN day = (SELECT day0 FROM d0)
+                                     THEN value * 2 ELSE value END
+                                AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+           FROM ev GROUP BY 1"""),
+    Query("p_backfill", (s, dir) => {
       // BACKFILL PLANNER — the step BEFORE p_partition_overwrite: given a
       // sink that is missing some partitions (a loader died mid-month)
       // and holds one PARTIAL partition (a re-run that loaded only half a
@@ -263,8 +345,24 @@ object PipelineOps {
         .withColumn("status",
           whn(col("sink_rows") === 0, "missing").otherwise("stale"))
         .select("day", "src_rows", "sink_rows", "status")
-    }),
-    "p_incr_rollup" -> ((s, dir) => {
+    }, oracle =
+      // the deterministic partial load replayed: missing = day-of-month
+      // ≡ 0 mod 3, stale = earliest surviving day with odd event_ids
+      // dropped; the plan is the per-day count diff
+      """WITH ev AS (SELECT event_id, CAST(ts AS DATE) AS day FROM events),
+           kept AS (SELECT * FROM ev WHERE date_part('day', day) % 3 <> 0),
+           stale AS (SELECT min(day) AS sd FROM kept),
+           sink AS (SELECT * FROM kept
+                    WHERE NOT (day = (SELECT sd FROM stale)
+                               AND event_id % 2 = 1)),
+           s AS (SELECT day, count(*) AS src_rows FROM ev GROUP BY 1),
+           k AS (SELECT day, count(*) AS sink_rows FROM sink GROUP BY 1)
+           SELECT s.day, s.src_rows, COALESCE(k.sink_rows, 0) AS sink_rows,
+                  CASE WHEN COALESCE(k.sink_rows, 0) = 0 THEN 'missing'
+                       ELSE 'stale' END AS status
+           FROM s LEFT JOIN k ON s.day = k.day
+           WHERE COALESCE(k.sink_rows, 0) <> s.src_rows"""),
+    Query("p_incr_rollup", (s, dir) => {
       // incremental materialized-view maintenance: a daily rollup table is
       // maintained by merging each batch's PARTIAL aggregates additively
       // (existing + delta per day, then PK upsert on day) — three batches
@@ -305,8 +403,12 @@ object PipelineOps {
       applyDelta("2024-01-20 18:30:00", "2100-01-01 00:00:00")
       s.table(table).select(col("day"), col("n_events"),
         col("sum_value").cast("double").as("sum_value"))
-    }),
-    "p_cdc" -> ((s, _) => {
+    }, oracle =
+      // the full recompute the incremental maintenance must equal
+      """SELECT date_trunc('day', ts) AS day, count(*) AS n_events,
+                  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+           FROM events GROUP BY 1"""),
+    Query("p_cdc", (s, _) => {
       // CDC apply: initial snapshot (page 1), then an I/U/D change batch
       // with per-PK seq ordering — latest op wins, so in-batch I->D nets to
       // absent and D->I to the re-inserted row. The delete is what upsert
@@ -329,8 +431,28 @@ object PipelineOps {
       Loader.applyCdc(s, changes, table, dagRunPk)
       s.table(table).select("dag_id", "dag_run_id", "state")
         .orderBy(col("dag_id"), col("dag_run_id"))
-    }),
-    "p_scd2" -> ((s, dir) => {
+    }, oracle =
+      s"""WITH snap AS (
+              SELECT dag_id, dag_run_id, state
+              FROM read_json('$fixtureDir/dagRuns1.json', format='array',
+                columns={dag_id:'VARCHAR', dag_run_id:'VARCHAR', state:'VARCHAR'})),
+            cdc AS (
+              SELECT op, seq, dag_id, dag_run_id, state
+              FROM read_json('$fixtureDir/cdc.json', format='array',
+                columns={op:'VARCHAR', seq:'BIGINT', dag_id:'VARCHAR',
+                         dag_run_id:'VARCHAR', state:'VARCHAR'})),
+            latest AS (
+              SELECT op, dag_id, dag_run_id, state FROM (
+                SELECT *, row_number() OVER (PARTITION BY dag_id, dag_run_id
+                           ORDER BY seq DESC) AS rn FROM cdc)
+              WHERE rn = 1)
+            SELECT s.dag_id, s.dag_run_id, s.state FROM snap s
+            WHERE NOT EXISTS (SELECT 1 FROM latest l
+                              WHERE l.dag_id = s.dag_id
+                                AND l.dag_run_id = s.dag_run_id)
+            UNION ALL
+            SELECT dag_id, dag_run_id, state FROM latest WHERE op <> 'D'"""),
+    Query("p_scd2", (s, dir) => {
       // slowly-changing-dimension type 2 build: collapse each user's event
       // stream into validity intervals of their event_type "state" — change
       // detection via lag, interval close via lead, open interval =
@@ -351,8 +473,19 @@ object PipelineOps {
         .select(col("user_id"), col("event_type").as("state"),
           col("ts").as("valid_from"), col("valid_to"),
           col("valid_to").isNull.as("is_current"))
-    }),
-    "p_jdbc_upsert" -> ((s, _) => {
+    }, oracle =
+      """WITH c AS (SELECT user_id, ts, event_id, event_type,
+                  lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
+                  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
+             FROM events),
+           ch AS (SELECT user_id, ts, event_id, event_type FROM c
+                  WHERE rn = 1 OR prev_type IS DISTINCT FROM event_type)
+           SELECT user_id, event_type AS state, ts AS valid_from,
+                  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
+                  (lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL)
+                    AS is_current
+           FROM ch"""),
+    Query("p_jdbc_upsert", (s, _) => {
       val dbName = "graft" + java.util.UUID.randomUUID().toString.replace("-", "")
       val url = s"jdbc:derby:memory:$dbName;create=true"
       try {
@@ -386,8 +519,8 @@ object PipelineOps {
         try DriverManager.getConnection(s"jdbc:derby:memory:$dbName;drop=true")
         catch { case _: java.sql.SQLNonTransientConnectionException => () }
       }
-    }),
-    "p_jdbc_scan" -> ((s, _) => {
+    }, oracle = replay("DESC", "dag_id, dag_run_id, state")),
+    Query("p_jdbc_scan", (s, _) => {
       // parallel JDBC EXTRACTION (the read twin of p_jdbc_upsert's sink):
       // seed Derby exactly like p_jdbc_upsert, then pull the table back
       // through JdbcSource.readPartitionedAuto — bounds from one scalar
@@ -418,153 +551,6 @@ object PipelineOps {
         try DriverManager.getConnection(s"jdbc:derby:memory:$dbName;drop=true")
         catch { case _: java.sql.SQLNonTransientConnectionException => () }
       }
-    })
+    }, oracle = replay("DESC", "dag_id, dag_run_id, state"))
   )
-
-  /** DuckDB replays of the staged-fixture loads. `def`, not `val`: the SQL
-    * embeds the fixture temp dir, which must exist when Verify serializes
-    * oracle_sql.json (it does — queries run first, and Fixtures.dir is
-    * idempotent per JVM). */
-  def oracles: Map[String, String] = {
-    val src = s"read_json('$fixtureDir/dagRuns*.json', format='array', " +
-      "filename=true, columns={dag_id:'VARCHAR', dag_run_id:'VARCHAR', " +
-      "end_date:'VARCHAR', execution_date:'VARCHAR', " +
-      "external_trigger:'BOOLEAN', logical_date:'VARCHAR', " +
-      "start_date:'VARCHAR', state:'VARCHAR'})"
-    def replay(order: String, cols: String) =
-      s"""WITH staged AS (
-            SELECT dag_id, dag_run_id, execution_date, state,
-                   row_number() OVER (PARTITION BY dag_id, dag_run_id
-                                      ORDER BY filename $order) AS rn
-            FROM $src)
-          SELECT $cols FROM staged WHERE rn = 1"""
-    Map(
-      "p_snapshot_diff" ->
-        """WITH oldw AS (SELECT o_custkey, count(*) AS n_orders,
-                                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
-                         FROM orders
-                         WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-                           AND o_orderdate < TIMESTAMP '1998-01-01'
-                         GROUP BY 1),
-           neww AS (SELECT o_custkey, count(*) AS n_orders,
-                           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
-                    FROM orders
-                    WHERE o_orderdate >= TIMESTAMP '1998-01-01'
-                      AND o_orderdate < TIMESTAMP '2000-01-01'
-                    GROUP BY 1)
-           SELECT coalesce(o.o_custkey, n.o_custkey) AS o_custkey,
-                  o.n_orders AS n_orders_old, o.spend AS spend_old,
-                  n.n_orders AS n_orders_new, n.spend AS spend_new,
-                  CASE WHEN o.o_custkey IS NULL THEN 'I'
-                       WHEN n.o_custkey IS NULL THEN 'D'
-                       ELSE 'U' END AS op
-           FROM oldw o FULL JOIN neww n ON o.o_custkey = n.o_custkey
-           WHERE o.o_custkey IS NULL OR n.o_custkey IS NULL
-              OR o.n_orders <> n.n_orders OR o.spend <> n.spend""",
-      "p_incr_rollup" ->
-        // the full recompute the incremental maintenance must equal
-        """SELECT date_trunc('day', ts) AS day, count(*) AS n_events,
-                  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-           FROM events GROUP BY 1""",
-      "p_backfill" ->
-        // the deterministic partial load replayed: missing = day-of-month
-        // ≡ 0 mod 3, stale = earliest surviving day with odd event_ids
-        // dropped; the plan is the per-day count diff
-        """WITH ev AS (SELECT event_id, CAST(ts AS DATE) AS day FROM events),
-           kept AS (SELECT * FROM ev WHERE date_part('day', day) % 3 <> 0),
-           stale AS (SELECT min(day) AS sd FROM kept),
-           sink AS (SELECT * FROM kept
-                    WHERE NOT (day = (SELECT sd FROM stale)
-                               AND event_id % 2 = 1)),
-           s AS (SELECT day, count(*) AS src_rows FROM ev GROUP BY 1),
-           k AS (SELECT day, count(*) AS sink_rows FROM sink GROUP BY 1)
-           SELECT s.day, s.src_rows, COALESCE(k.sink_rows, 0) AS sink_rows,
-                  CASE WHEN COALESCE(k.sink_rows, 0) = 0 THEN 'missing'
-                       ELSE 'stale' END AS status
-           FROM s LEFT JOIN k ON s.day = k.day
-           WHERE COALESCE(k.sink_rows, 0) <> s.src_rows""",
-      "p_targeted_delete" ->
-        // the erased table recomputed from raw events: every row of the
-        // target set gone, everything else byte-identical — equality over
-        // ALL days proves unaffected partitions were never touched
-        """SELECT CAST(ts AS DATE) AS day,
-                  CAST(count(*) AS BIGINT) AS n_events,
-                  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-                    AS sum_value
-           FROM events
-           WHERE NOT COALESCE(user_id % 97 = 0, FALSE)
-           GROUP BY 1""",
-      "p_retention" ->
-        // survivors = days at or past the cutoff (earliest + 10 days)
-        """WITH ev AS (SELECT event_id, value, CAST(ts AS DATE) AS day
-                       FROM events),
-           c AS (SELECT min(day) + INTERVAL 10 DAY AS cutoff FROM ev)
-           SELECT day, CAST(count(*) AS BIGINT) AS n_events,
-                  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-                    AS sum_value
-           FROM ev WHERE day >= (SELECT cutoff FROM c)
-           GROUP BY 1""",
-      "p_schema_evolution" ->
-        // the drift replayed from the base table: odd keys carry the new
-        // column, even keys are the LEGACY (pre-evolution) bucket
-        """SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority
-                       ELSE 'LEGACY' END AS prio,
-                  count(*) AS n_orders,
-                  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                    AS revenue
-           FROM orders GROUP BY 1""",
-      "p_partition_overwrite" ->
-        // the corrected full recompute: earliest day doubled, all other
-        // days untouched — equality proves the dynamic overwrite replaced
-        // exactly one partition (twice, idempotently)
-        """WITH ev AS (SELECT event_id, value, date_trunc('day', ts) AS day
-                       FROM events),
-           d0 AS (SELECT min(day) AS day0 FROM ev)
-           SELECT day, CAST(count(*) AS BIGINT) AS n_events,
-                  CAST(sum(CAST(CASE WHEN day = (SELECT day0 FROM d0)
-                                     THEN value * 2 ELSE value END
-                                AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-           FROM ev GROUP BY 1""",
-      "p_cdc" ->
-        s"""WITH snap AS (
-              SELECT dag_id, dag_run_id, state
-              FROM read_json('$fixtureDir/dagRuns1.json', format='array',
-                columns={dag_id:'VARCHAR', dag_run_id:'VARCHAR', state:'VARCHAR'})),
-            cdc AS (
-              SELECT op, seq, dag_id, dag_run_id, state
-              FROM read_json('$fixtureDir/cdc.json', format='array',
-                columns={op:'VARCHAR', seq:'BIGINT', dag_id:'VARCHAR',
-                         dag_run_id:'VARCHAR', state:'VARCHAR'})),
-            latest AS (
-              SELECT op, dag_id, dag_run_id, state FROM (
-                SELECT *, row_number() OVER (PARTITION BY dag_id, dag_run_id
-                           ORDER BY seq DESC) AS rn FROM cdc)
-              WHERE rn = 1)
-            SELECT s.dag_id, s.dag_run_id, s.state FROM snap s
-            WHERE NOT EXISTS (SELECT 1 FROM latest l
-                              WHERE l.dag_id = s.dag_id
-                                AND l.dag_run_id = s.dag_run_id)
-            UNION ALL
-            SELECT dag_id, dag_run_id, state FROM latest WHERE op <> 'D'""",
-      "p_scd2" ->
-        """WITH c AS (SELECT user_id, ts, event_id, event_type,
-                  lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
-                  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-             FROM events),
-           ch AS (SELECT user_id, ts, event_id, event_type FROM c
-                  WHERE rn = 1 OR prev_type IS DISTINCT FROM event_type)
-           SELECT user_id, event_type AS state, ts AS valid_from,
-                  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
-                  (lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL)
-                    AS is_current
-           FROM ch""",
-      "p_reporting_e2e" -> replay("ASC",
-        """dag_id, dag_run_id,
-           CAST(CAST(execution_date AS TIMESTAMPTZ) AT TIME ZONE 'UTC' AS TIMESTAMP)
-             AS execution_date,
-           state"""),
-      "p_upsert_state" -> replay("DESC", "dag_id, dag_run_id, state"),
-      "p_jdbc_upsert" -> replay("DESC", "dag_id, dag_run_id, state"),
-      "p_jdbc_scan" -> replay("DESC", "dag_id, dag_run_id, state"))
-  }
 }

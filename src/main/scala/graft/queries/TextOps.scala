@@ -126,15 +126,38 @@ object TextOps {
     }
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t_tokens" -> ((s, dir) => {
+  private def clustersVia(s: SparkSession, dir: String,
+      cc: (DataFrame, String, String) => DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val prs = TextDedup.simhashPairs(docs(s, dir), "doc_id", "text", 2)
+      .select("doc_a", "doc_b")
+    cc(prs, "doc_a", "doc_b")
+      .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
+      .withColumn("cluster_size",
+        count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
+  }
+
+  private val shingleSql =
+    """sh AS (
+         SELECT doc_id, unnest(list_distinct(list_transform(
+                  generate_series(1, len(toks)-2),
+                  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS sh
+         FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+         WHERE len(toks) >= 3)"""
+
+  val queries: Seq[Query] = Seq(
+    Query("t_tokens", (s, dir) => {
       docs(s, dir).select(
         col("doc_id"),
         length(col("text")).as("char_len"),
         size(TextFunctions.tokens(col("text"))).as("n_ws_tokens"),
         TextFunctions.bpeTokenCount(col("text")).as("n_bpe_tokens"))
-    }),
-    "t_quality" -> ((s, dir) => {
+    }, oracle =
+      """SELECT doc_id, CAST(length(text) AS INTEGER) AS char_len,
+                CAST(len(string_split(text, ' ')) AS INTEGER) AS n_ws_tokens,
+                CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS INTEGER) AS n_bpe_tokens
+         FROM documents"""),
+    Query("t_quality", (s, dir) => {
       // NB each derived column re-splits text (3 splits/row): acceptable
       // for short docs; TextFunctions.bind can't share across sibling
       // columns (SimplifyExtractValueOps re-inlines struct fields)
@@ -151,8 +174,20 @@ object TextOps {
           round((col("n_uniq").cast("double") / col("n_tokens")) *
             when(col("n_tokens").between(20, 400), 1.0).otherwise(0.5), 6)
             .as("quality_score"))
-    }),
-    "t_gopher_rules" -> ((s, dir) => {
+    }, oracle =
+      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
+         c AS (SELECT doc_id, text,
+                      CAST(len(toks) AS INTEGER) AS n_tokens,
+                      CAST(len(list_distinct(toks)) AS INTEGER) AS n_uniq,
+                      CAST(len(list_filter(toks, x -> x IN ('the', 'a'))) AS INTEGER) AS n_stop
+               FROM t)
+         SELECT doc_id, n_tokens, n_uniq, n_stop,
+                round(CAST(length(replace(text, ' ', '')) AS DOUBLE)/n_tokens, 6) AS avg_token_len,
+                round(CAST(n_stop AS DOUBLE)/n_tokens, 6) AS stop_ratio,
+                round((CAST(n_uniq AS DOUBLE)/n_tokens) *
+                      (CASE WHEN n_tokens BETWEEN 20 AND 400 THEN 1.0 ELSE 0.5 END), 6) AS quality_score
+         FROM c"""),
+    Query("t_gopher_rules", (s, dir) => {
       // the Gopher quality-filter rule suite (Rae et al. 2021, §A1.1 —
       // public recipe) as explicit per-rule flags + the conjunction:
       // 50 ≤ word count ≤ 100k, 3 ≤ mean word length ≤ 10, ≥ 2 stopword
@@ -182,15 +217,59 @@ object TextOps {
           (col("n_words").between(50, 100000) &&
             col("mean_word_len").between(3.0, 10.0) &&
             col("n_stop") >= 2).cast("int").as("keep"))
-    }),
-    "t_langid" -> ((s, dir) => {
+    }, oracle =
+      // identical rule arithmetic: integer word/stopword counts, the
+      // single-division mean word length, BETWEEN on identical doubles
+      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks
+                    FROM documents),
+         c AS (SELECT doc_id,
+                 CAST(len(toks) AS INTEGER) AS n_words,
+                 CAST(length(replace(text, ' ', '')) AS DOUBLE) / len(toks)
+                   AS mwl,
+                 CAST(len(list_filter(toks,
+                   x -> x IN ('the', 'a', 'of', 'to', 'and'))) AS INTEGER)
+                   AS n_stop
+               FROM t)
+         SELECT doc_id, n_words, round(mwl, 6) AS mean_word_len, n_stop,
+                CAST(CASE WHEN n_words BETWEEN 50 AND 100000
+                     THEN 1 ELSE 0 END AS INTEGER) AS r_word_count,
+                CAST(CASE WHEN mwl BETWEEN 3.0 AND 10.0
+                     THEN 1 ELSE 0 END AS INTEGER) AS r_mean_len,
+                CAST(CASE WHEN n_stop >= 2
+                     THEN 1 ELSE 0 END AS INTEGER) AS r_stopwords,
+                CAST(CASE WHEN n_words BETWEEN 50 AND 100000
+                          AND mwl BETWEEN 3.0 AND 10.0
+                          AND n_stop >= 2
+                     THEN 1 ELSE 0 END AS INTEGER) AS keep
+         FROM c"""),
+    Query("t_langid", (s, dir) => {
       withMarkerCounts(docs(s, dir)).select(
           col("doc_id"), col("lang"),
           col("n_en"), col("n_es"), col("n_fr"), col("n_de"), col("n_zh"),
           predLang.as("pred_lang"))
         .withColumn("is_match", col("pred_lang") === col("lang"))
-    }),
-    "t_curate" -> ((s, dir) => {
+    }, oracle =
+      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
+         c AS (SELECT doc_id, lang,
+                 CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','is'))) AS INTEGER) AS n_en,
+                 CAST(len(list_filter(toks, x -> x IN ('el','la','los','es','y'))) AS INTEGER) AS n_es,
+                 CAST(len(list_filter(toks, x -> x IN ('le','les','des','et','est'))) AS INTEGER) AS n_fr,
+                 CAST(len(list_filter(toks, x -> x IN ('der','die','das','und','ist'))) AS INTEGER) AS n_de,
+                 CAST(len(list_filter(toks, x -> x IN ('de0','shi4','le0','zai4','wo3'))) AS INTEGER) AS n_zh
+               FROM t)
+         SELECT doc_id, lang, n_en, n_es, n_fr, n_de, n_zh,
+                CASE WHEN n_zh > greatest(n_en, n_es, n_fr, n_de) THEN 'zh'
+                     WHEN n_de > greatest(n_en, n_es, n_fr) THEN 'de'
+                     WHEN n_fr > greatest(n_en, n_es) THEN 'fr'
+                     WHEN n_es > n_en THEN 'es'
+                     ELSE 'en' END AS pred_lang,
+                (CASE WHEN n_zh > greatest(n_en, n_es, n_fr, n_de) THEN 'zh'
+                      WHEN n_de > greatest(n_en, n_es, n_fr) THEN 'de'
+                      WHEN n_fr > greatest(n_en, n_es) THEN 'fr'
+                      WHEN n_es > n_en THEN 'es'
+                      ELSE 'en' END) = lang AS is_match
+         FROM c"""),
+    Query("t_curate", (s, dir) => {
       // flagship curation composition — the full "raw corpus → training
       // corpus" chain as ONE declarative plan: canonical copy of each
       // exact-duplicate group, predicted-English only, token-count window.
@@ -204,8 +283,29 @@ object TextOps {
         .withColumn("n_tokens", size(TextFunctions.tokens(col("text"))))
         .filter(col("pred_lang") === "en" && col("n_tokens").between(20, 80))
         .select("doc_id", "lang", "n_tokens")
-    }),
-    "t_freq_quality" -> ((s, dir) => {
+    }, oracle =
+      // replays the curation chain: exact-dedup canonical survivors →
+      // marker-vote language prediction (same CASE chain as t_langid) →
+      // predicted-en + token-window filters
+      """WITH keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+         t AS (SELECT d.doc_id, d.lang, string_split(d.text, ' ') AS toks
+               FROM documents d JOIN keep USING (doc_id)),
+         c AS (SELECT doc_id, lang,
+                 CAST(len(toks) AS INTEGER) AS n_tokens,
+                 len(list_filter(toks, x -> x IN ('the','a','of','and','is'))) AS n_en,
+                 len(list_filter(toks, x -> x IN ('el','la','los','es','y'))) AS n_es,
+                 len(list_filter(toks, x -> x IN ('le','les','des','et','est'))) AS n_fr,
+                 len(list_filter(toks, x -> x IN ('der','die','das','und','ist'))) AS n_de,
+                 len(list_filter(toks, x -> x IN ('de0','shi4','le0','zai4','wo3'))) AS n_zh
+               FROM t)
+         SELECT doc_id, lang, n_tokens FROM c
+         WHERE (CASE WHEN n_zh > greatest(n_en, n_es, n_fr, n_de) THEN 'zh'
+                     WHEN n_de > greatest(n_en, n_es, n_fr) THEN 'de'
+                     WHEN n_fr > greatest(n_en, n_es) THEN 'fr'
+                     WHEN n_es > n_en THEN 'es'
+                     ELSE 'en' END) = 'en'
+           AND n_tokens BETWEEN 20 AND 80"""),
+    Query("t_freq_quality", (s, dir) => {
       // corpus-statistics quality signal: mean corpus-frequency ratio of a
       // doc's tokens (rare-token-heavy docs score low) — the shape of
       // frequency-based LLM data filters. Corpus stats join back to docs;
@@ -230,8 +330,16 @@ object TextOps {
             .cast(org.apache.spark.sql.types.DecimalType(28, 18))).as("sum_ratio"))
         .select(col("doc_id"), col("n_tokens"),
           round(col("sum_ratio").cast("double") / col("n_tokens"), 9).as("mean_freq_ratio"))
-    }),
-    "t_winnow" -> ((s, dir) => {
+    }, oracle =
+      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
+         corpus AS (SELECT tok, count(*) AS tok_freq FROM toks GROUP BY tok),
+         total AS (SELECT count(*) AS n FROM toks)
+         SELECT doc_id, count(*) AS n_tokens,
+                round(CAST(sum(CAST(CAST(tok_freq AS DOUBLE)/total.n AS DECIMAL(28,18))) AS DOUBLE)
+                      / count(*), 9) AS mean_freq_ratio
+         FROM toks JOIN corpus USING (tok), total
+         GROUP BY doc_id"""),
+    Query("t_winnow", (s, dir) => {
       // winnowing fingerprints: 3-gram md5 hashes, window-4 minima.
       // docs shorter than n+w-1 tokens excluded in both engines.
       // Native codegen'd WinnowExpr — byte-identical to the interpreted
@@ -243,14 +351,26 @@ object TextOps {
         .select(col("doc_id"),
           explode(call_function("graft_winnow",
             TextFunctions.tokens(col("text")), lit(3), lit(4))).as("fp"))
-    }),
-    "t_fingerprint" -> ((s, dir) => {
+    }, oracle =
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+         g AS (SELECT doc_id,
+                      list_transform(generate_series(1, len(toks) - 2),
+                        i -> md5(toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS hs
+               FROM t WHERE len(toks) >= 6)
+         SELECT doc_id,
+                unnest(list_distinct(list_transform(generate_series(1, len(hs) - 3),
+                  i -> list_aggregate(hs[i:i+3], 'min')))) AS fp
+         FROM g"""),
+    Query("t_fingerprint", (s, dir) => {
       docs(s, dir).select(
         col("doc_id"),
         TextFunctions.fingerprint(col("text")).as("fp"),
         substring(TextFunctions.fingerprint(col("text")), 1, 8).as("fp_prefix"))
-    }),
-    "t_source_quota" -> ((s, dir) => {
+    }, oracle =
+      """SELECT doc_id, md5(trim(lower(text))) AS fp,
+                substr(md5(trim(lower(text))), 1, 8) AS fp_prefix
+         FROM documents"""),
+    Query("t_source_quota", (s, dir) => {
       // per-source document cap — the web-pipeline "domain quota": no
       // single source/domain may contribute more than K docs to the
       // training mix; survivors are the source's best by token count
@@ -265,8 +385,16 @@ object TextOps {
       org.apache.spark.sql.GraftPlanBridge.topKPerKey(d,
           Seq("source"), Seq("n_tokens" -> false, "doc_id" -> true), k = 5)
         .select("source", "doc_id", "n_tokens")
-    }),
-    "t_ngram_novelty" -> ((s, dir) => {
+    }, oracle =
+      """WITH d AS (SELECT doc_id, source,
+                           CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens
+                    FROM documents),
+         r AS (SELECT source, doc_id, n_tokens,
+                      row_number() OVER (PARTITION BY source
+                        ORDER BY n_tokens DESC, doc_id ASC) AS rn
+               FROM d)
+         SELECT source, doc_id, n_tokens FROM r WHERE rn <= 5"""),
+    Query("t_ngram_novelty", (s, dir) => {
       // train/test n-gram NOVELTY — the generalization sibling of
       // t_decontaminate: for each test-split document, the fraction of
       // its distinct word 3-grams never seen anywhere in the train split
@@ -293,8 +421,23 @@ object TextOps {
           coalesce(col("n_novel"), lit(0L)).as("n_novel"),
           round(coalesce(col("n_novel"), lit(0L)).cast("double")
             / col("n_grams").cast("double"), 6).as("novelty_rate"))
-    }),
-    "t_render_sft" -> ((s, dir) =>
+    }, oracle =
+      // the shared shingle CTE split by the same md5 rule; NOT IN is safe
+      // (shingles are never NULL), per-doc ratio of exact integers
+      s"""WITH $shingleSql,
+         tr AS (SELECT DISTINCT sh FROM sh
+                WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c'),
+         te AS (SELECT doc_id, sh FROM sh
+                WHERE NOT substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c'),
+         nv AS (SELECT doc_id, count(*) AS n_novel FROM te
+                WHERE sh NOT IN (SELECT sh FROM tr) GROUP BY 1),
+         g AS (SELECT doc_id, count(*) AS n_grams FROM te GROUP BY 1)
+         SELECT g.doc_id, CAST(n_grams AS BIGINT) AS n_grams,
+                CAST(coalesce(n_novel, 0) AS BIGINT) AS n_novel,
+                round(CAST(coalesce(n_novel, 0) AS DOUBLE)
+                      / CAST(n_grams AS DOUBLE), 6) AS novelty_rate
+         FROM g LEFT JOIN nv ON g.doc_id = nv.doc_id"""),
+    Query("t_render_sft", (s, dir) =>
       // training-record RENDERING — the last deterministic step before
       // tokenization: each doc becomes a chat-template record (system +
       // user turn from the first 8 tokens as a synthetic instruction +
@@ -316,8 +459,22 @@ object TextOps {
             lit("<|end|>")).as("record"))
         .select(col("doc_id"), col("lang"),
           length(col("record")).as("record_chars"),
-          md5(col("record")).as("record_md5"))),
-    "t_window_chunk" -> ((s, dir) =>
+          md5(col("record")).as("record_md5")), oracle =
+      // byte-identical re-render: same markers, same 8-token instruction
+      // slice, same newlines; length + md5 gate the whole template
+      """SELECT doc_id, lang,
+                CAST(length('<|system|>lang=' || lang || chr(10) ||
+                  '<|user|>' ||
+                  array_to_string(list_slice(string_split(text, ' '), 1, 8), ' ') ||
+                  chr(10) || '<|assistant|>' || text || '<|end|>') AS INTEGER)
+                  AS record_chars,
+                md5('<|system|>lang=' || lang || chr(10) ||
+                  '<|user|>' ||
+                  array_to_string(list_slice(string_split(text, ' '), 1, 8), ' ') ||
+                  chr(10) || '<|assistant|>' || text || '<|end|>')
+                  AS record_md5
+         FROM documents"""),
+    Query("t_window_chunk", (s, dir) =>
       // context-window chunking — the embedding/RAG ingestion shape: each
       // doc splits into 64-token windows at stride 48 (16-token overlap so
       // no boundary context is lost), each chunk identified by its md5 —
@@ -336,8 +493,25 @@ object TextOps {
           expr("(start - 1) div 48").cast(IntegerType).as("chunk_id"),
           col("start").cast(IntegerType).as("start"),
           expr("size(slice(toks, start, 64))").as("chunk_tokens"),
-          md5(expr("array_join(slice(toks, start, 64), ' ')")).as("chunk_md5"))),
-    "t_diversity" -> ((s, dir) =>
+          md5(expr("array_join(slice(toks, start, 64), ' ')")).as("chunk_md5")), oracle =
+      // identical window arithmetic: generate_series starts, inclusive
+      // 1-based list_slice (same tail truncation as Spark's slice), md5
+      // over the space-joined window
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
+                    FROM documents),
+         g AS (SELECT doc_id, toks,
+                      unnest(generate_series(1, greatest(len(toks), 1), 48))
+                        AS start
+               FROM t)
+         SELECT doc_id,
+                CAST((start - 1) // 48 AS INTEGER) AS chunk_id,
+                CAST(start AS INTEGER) AS start,
+                CAST(len(list_slice(toks, start, start + 63)) AS INTEGER)
+                  AS chunk_tokens,
+                md5(array_to_string(list_slice(toks, start, start + 63), ' '))
+                  AS chunk_md5
+         FROM g"""),
+    Query("t_diversity", (s, dir) =>
       // lexical diversity as Gini–Simpson index: 1 − Σc_i²/N² over the
       // per-doc token histogram — the LOG-FREE diversity signal (token
       // entropy needs libm log, which is not bit-identical across
@@ -352,8 +526,19 @@ object TextOps {
         .agg(sum(col("c") * col("c")).as("s2"), sum(col("c")).as("n"))
         .select(col("doc_id"), col("n").as("n_tokens"),
           round(lit(1.0) - col("s2").cast("double")
-            / (col("n") * col("n")).cast("double"), 6).as("diversity"))),
-    "d_canonical" -> ((s, dir) =>
+            / (col("n") * col("n")).cast("double"), 6).as("diversity")), oracle =
+      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+                      FROM documents),
+         c AS (SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY 1, 2),
+         a AS (SELECT doc_id, CAST(sum(c * c) AS BIGINT) AS s2,
+                      CAST(sum(c) AS BIGINT) AS n
+               FROM c GROUP BY 1)
+         SELECT doc_id, n AS n_tokens,
+                round(CAST(1 AS DOUBLE)
+                      - CAST(s2 AS DOUBLE) / CAST(n * n AS DOUBLE), 6)
+                  AS diversity
+         FROM a"""),
+    Query("d_canonical", (s, dir) =>
       // dedup ENDGAME: one canonical document per near-dup cluster — the
       // step that turns pair/cluster discovery into an actual curation
       // decision. Clusters come from the declared SimHash → connected-
@@ -370,8 +555,18 @@ object TextOps {
           max(struct(col("n_chars"), (-col("doc_id")).as("nd"))).as("m"))
         .select(col("cluster_id"), col("n_members"),
           (-col("m.nd")).as("canonical_doc"),
-          col("m.n_chars").as("canonical_chars"))),
-    "t_mix_sqrt" -> ((s, dir) => {
+          col("m.n_chars").as("canonical_chars")), oracle =
+      // the d_dedup_clusters replay + the longest-member argmax
+      s"""WITH $clustersCteSql,
+         j AS (SELECT l.cluster_id, d.doc_id, d.n_chars
+               FROM labels l JOIN documents d ON l.doc_id = d.doc_id)
+         SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
+                -((max(struct_pack(n_chars := n_chars, nd := -doc_id))).nd)
+                  AS canonical_doc,
+                (max(struct_pack(n_chars := n_chars, nd := -doc_id))).n_chars
+                  AS canonical_chars
+         FROM j GROUP BY 1"""),
+    Query("t_mix_sqrt", (s, dir) => {
       // temperature-balanced source mixing (the multilingual-sampling
       // recipe at α = 0.5): sampling share per source ∝ √(token count),
       // up-weighting small sources against head domains. α = 0.5 is the
@@ -397,8 +592,26 @@ object TextOps {
         .select(col("source"), col("n_docs"), col("n_tokens"),
           round(col("share"), 6).as("share"),
           floor(col("share") * 100000.0).cast("long").as("target_docs"))
-    }),
-    "t_curriculum" -> ((s, dir) => {
+    }, oracle =
+      // identical √-weight chain: per-source token sum, sqrt (IEEE-exact
+      // at α = 0.5), DECIMAL(28,16)-cast terms into an order-independent
+      // windowed total, one double division, floored integer allocation
+      """WITH a AS (SELECT source, count(*) AS n_docs,
+                           CAST(sum(len(string_split(text, ' '))) AS BIGINT)
+                             AS n_tokens
+                    FROM documents GROUP BY 1),
+         w AS (SELECT source, n_docs, n_tokens,
+                      CAST(sqrt(CAST(n_tokens AS DOUBLE)) AS DECIMAL(28,16))
+                        AS wdec
+               FROM a),
+         sh AS (SELECT source, n_docs, n_tokens,
+                       CAST(wdec AS DOUBLE)
+                         / CAST(sum(wdec) OVER () AS DOUBLE) AS share
+                FROM w)
+         SELECT source, n_docs, n_tokens, round(share, 6) AS share,
+                CAST(floor(share * 100000.0) AS BIGINT) AS target_docs
+         FROM sh"""),
+    Query("t_curriculum", (s, dir) => {
       // curriculum schedule (easy→hard data ordering, Bengio et al.
       // ICML'09 — the public recipe every staged pre-training run uses):
       // assign each document a training PHASE by difficulty quantile
@@ -429,8 +642,27 @@ object TextOps {
       scored.select(col("doc_id"), col("source"),
         ntile(4).over(bySrc).as("phase"),
         round(col("score"), 6).as("score"))
-    }),
-    "t_mix_doremi" -> ((s, dir) => {
+    }, oracle =
+      // identical difficulty chain (the t_classifier_score hash/weight
+      // sum), then ntile(4) per source over the shared total order
+      // (score DESC, doc_id ASC)
+      """WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS toks
+                    FROM documents),
+         c AS (SELECT doc_id, source,
+                 CAST(len(toks) AS INTEGER) AS n_tokens,
+                 CAST(list_aggregate(list_transform(toks,
+                   t -> ('0x' || substr(md5('w' ||
+                          CAST(('0x' || substr(md5(t), 1, 6))::BIGINT % 64
+                               AS VARCHAR)), 1, 4))::BIGINT % 2001 - 1000),
+                   'sum') AS BIGINT) AS w_sum
+               FROM t)
+         SELECT doc_id, source,
+                CAST(ntile(4) OVER (PARTITION BY source
+                     ORDER BY CAST(w_sum AS DOUBLE) / greatest(n_tokens, 1) DESC,
+                              doc_id ASC) AS INTEGER) AS phase,
+                round(CAST(w_sum AS DOUBLE) / greatest(n_tokens, 1), 6) AS score
+         FROM c"""),
+    Query("t_mix_doremi", (s, dir) => {
       // excess-quality source reweighting (DoReMi, Xie et al. NeurIPS'23
       // — public recipe SHAPE: upweight domains where the model's excess
       // loss is largest; here ONE multiplicative-weights step, linearized
@@ -472,8 +704,39 @@ object TextOps {
           round(col("excess"), 6).as("excess"),
           round(col("share"), 6).as("share"),
           floor(col("share") * 100000.0).cast("long").as("target_docs"))
-    }),
-    "t_dsir" -> ((s, dir) => {
+    }, oracle =
+      // identical per-source integer sums; the same single-division rates,
+      // linearized multiplicative update, DECIMAL-cast share denominator
+      """WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS toks
+                    FROM documents),
+         c AS (SELECT source,
+                 CAST(len(toks) AS BIGINT) AS nt,
+                 CAST(list_aggregate(list_transform(toks,
+                   t -> ('0x' || substr(md5('w' ||
+                          CAST(('0x' || substr(md5(t), 1, 6))::BIGINT % 64
+                               AS VARCHAR)), 1, 4))::BIGINT % 2001 - 1000),
+                   'sum') AS BIGINT) AS ws
+               FROM t),
+         s AS (SELECT source, count(*) AS n_docs,
+                      CAST(sum(nt) AS BIGINT) AS n_tokens,
+                      CAST(sum(ws) AS BIGINT) AS w_sum
+               FROM c GROUP BY 1),
+         g AS (SELECT *, CAST(sum(w_sum) OVER () AS DOUBLE)
+                         / CAST(sum(n_tokens) OVER () AS DOUBLE) AS corpus_rate
+               FROM s),
+         x AS (SELECT *, greatest(CAST(w_sum AS DOUBLE) / n_tokens
+                                  - corpus_rate, 0.0) AS excess FROM g),
+         wv AS (SELECT *, CAST(CAST(n_tokens AS DOUBLE) * (1.0 + excess / 1000.0)
+                               AS DECIMAL(28,16)) AS wdec FROM x)
+         SELECT source, n_docs, n_tokens,
+                round(excess, 6) AS excess,
+                round(CAST(wdec AS DOUBLE)
+                      / CAST(sum(wdec) OVER () AS DOUBLE), 6) AS share,
+                CAST(floor(CAST(wdec AS DOUBLE)
+                      / CAST(sum(wdec) OVER () AS DOUBLE) * 100000.0)
+                     AS BIGINT) AS target_docs
+         FROM wv"""),
+    Query("t_dsir", (s, dir) => {
       // DSIR-style data selection via importance resampling (Xie et al.,
       // NeurIPS'23 — public recipe): score every raw-corpus doc by how
       // much more likely its HASHED-NGRAM features are under a target
@@ -516,8 +779,36 @@ object TextOps {
         .select(col("doc_id"), col("n_tok"), col("a_sum"), col("b_sum"),
           round(col("score"), 9).as("score"),
           (col("score") > 0).cast("int").as("selected"))
-    }),
-    "t_weighted_sample" -> ((s, dir) => {
+    }, oracle =
+      // identical hashed-bucket model: md5-unigram → 256 buckets, add-one
+      // smoothed target/raw counts, the pure-integer per-doc sums, and the
+      // same two-division IEEE score chain
+      """WITH tok AS (SELECT doc_id, lang,
+                unnest(string_split(text, ' ')) AS tok FROM documents),
+         tf AS MATERIALIZED (SELECT doc_id, lang,
+                ('0x' || substr(md5(tok), 1, 8))::BIGINT % 256 AS f
+              FROM tok),
+         raw AS (SELECT f, count(*) AS cr FROM tf GROUP BY 1),
+         tgt AS (SELECT f, count(*) AS ct FROM tf WHERE lang = 'en' GROUP BY 1),
+         st AS MATERIALIZED (
+           SELECT r.f, COALESCE(t.ct, 0) AS ct, r.cr
+           FROM raw r LEFT JOIN tgt t USING (f)),
+         tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM st),
+         doc AS (SELECT d.doc_id,
+                        CAST(count(*) AS BIGINT) AS n_tok,
+                        CAST(sum(s.ct + 1) AS BIGINT) AS a_sum,
+                        CAST(sum(s.cr + 1) AS BIGINT) AS b_sum
+                 FROM tf d JOIN st s USING (f) GROUP BY 1),
+         sc AS (SELECT doc_id, n_tok, a_sum, b_sum,
+                       CAST(a_sum AS DOUBLE) / CAST(tt + 256 AS DOUBLE)
+                         - CAST(b_sum AS DOUBLE) / CAST(tr + 256 AS DOUBLE)
+                         AS score
+                FROM doc, tot)
+         SELECT doc_id, n_tok, a_sum, b_sum, round(score, 9) AS score,
+                CAST(CASE WHEN score > 0 THEN 1 ELSE 0 END AS INTEGER)
+                  AS selected
+         FROM sc"""),
+    Query("t_weighted_sample", (s, dir) => {
       // deterministic IMPORTANCE sampling: keep probability proportional to
       // a per-doc quality weight (token count capped at 1.0), decided by
       // comparing the doc's stable md5-fraction to its weight — the
@@ -532,8 +823,17 @@ object TextOps {
         .select(col("doc_id"), toks.as("n_tokens"),
           round(weight, 6).as("weight"))
         .filter(frac < weight)
-    }),
-    "t_upsample" -> ((s, dir) => {
+    }, oracle =
+      """WITH t AS (SELECT doc_id,
+                CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens
+         FROM documents)
+         SELECT doc_id, n_tokens,
+                round(least(1.0, CAST(n_tokens AS DOUBLE) / 100.0), 6) AS weight
+         FROM t
+         WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT
+               / 281474976710656.0
+               < least(1.0, CAST(n_tokens AS DOUBLE) / 100.0)"""),
+    Query("t_upsample", (s, dir) => {
       // integer replication by quality tier ("repeat good data"): high-tier
       // docs emit 3 copies, mid 2, rest 1, each tagged with its copy index
       // — the epoch-mixing primitive. explode(sequence(...)) keeps the
@@ -544,8 +844,18 @@ object TextOps {
         .select(col("doc_id"), toks.as("n_tokens"), copies.as("n_copies"))
         .select(col("doc_id"), col("n_tokens"), col("n_copies"),
           explode(sequence(lit(1), col("n_copies"))).as("copy_n"))
-    }),
-    "t_sample_split" -> ((s, dir) => {
+    }, oracle =
+      """WITH t AS (SELECT doc_id,
+                CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens
+         FROM documents),
+         c AS (SELECT doc_id, n_tokens,
+                      CASE WHEN n_tokens >= 60 THEN 3
+                           WHEN n_tokens >= 30 THEN 2 ELSE 1 END AS n_copies
+               FROM t)
+         SELECT doc_id, n_tokens, CAST(n_copies AS INTEGER) AS n_copies,
+                CAST(unnest(generate_series(1, n_copies)) AS INTEGER) AS copy_n
+         FROM c"""),
+    Query("t_sample_split", (s, dir) => {
       // deterministic train/val/test split (~90/5/5) on a hash of the
       // stable id: reproducible across runs and engines, and a doc's split
       // never changes as the corpus grows — the property leakage-free LLM
@@ -554,8 +864,13 @@ object TextOps {
       val h = substring(md5(col("doc_id").cast("string")), 1, 2)
       docs(s, dir).select(col("doc_id"),
         when(h < "e6", "train").when(h < "f3", "val").otherwise("test").as("split"))
-    }),
-    "t_clean" -> ((s, dir) => {
+    }, oracle =
+      """SELECT doc_id,
+                CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'train'
+                     WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'f3' THEN 'val'
+                     ELSE 'test' END AS split
+         FROM documents"""),
+    Query("t_clean", (s, dir) => {
       // token-level content cleaning: strip a stop-token list and rebuild
       // the text — the shape of every removal pass (stopwords, boilerplate
       // phrases, redaction placeholders) a training pipeline runs before
@@ -572,8 +887,17 @@ object TextOps {
         length(col("text")).as("raw_len"),
         length(array_join(kept, " ")).as("clean_len"),
         (size(toks) - size(kept)).as("n_removed"))
-    }),
-    "t_repetition" -> ((s, dir) => {
+    }, oracle =
+      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks,
+                           list_filter(string_split(text, ' '),
+                             x -> x NOT IN ('the', 'a')) AS kept
+                    FROM documents)
+         SELECT doc_id,
+                CAST(length(text) AS INTEGER) AS raw_len,
+                CAST(length(array_to_string(kept, ' ')) AS INTEGER) AS clean_len,
+                CAST(len(toks) - len(kept) AS INTEGER) AS n_removed
+         FROM t"""),
+    Query("t_repetition", (s, dir) => {
       // Gopher-style repetition filter signal: the fraction of positional
       // word 3-grams that are duplicates within the doc (1 - distinct/total)
       // — high values flag boilerplate/looping text. Rational arithmetic:
@@ -588,8 +912,18 @@ object TextOps {
         .filter(col("n_grams") > 0)
         .withColumn("rep_ratio",
           round(lit(1.0) - col("n_distinct").cast("double") / col("n_grams"), 6))
-    }),
-    "t_top_terms" -> ((s, dir) => {
+    }, oracle =
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+         g AS (SELECT doc_id, CAST(len(toks) - 2 AS INTEGER) AS n_grams,
+                      list_transform(generate_series(1, len(toks) - 2),
+                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS grams
+               FROM t WHERE len(toks) >= 3)
+         SELECT doc_id, n_grams,
+                CAST(len(list_distinct(grams)) AS INTEGER) AS n_distinct,
+                round(1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / n_grams, 6)
+                  AS rep_ratio
+         FROM g"""),
+    Query("t_top_terms", (s, dir) => {
       // per-doc top-3 distinguishing terms by tf·(N/df) — tf-idf shaped
       // keyword extraction without log() (libm log is not bit-identical
       // across engines; N is constant per ranking, so tf/df preserves the
@@ -607,8 +941,18 @@ object TextOps {
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 3)
         .select("doc_id", "tok", "tf", "df_cnt", "rank")
-    }),
-    "t_stratified" -> ((s, dir) => {
+    }, oracle =
+      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
+         tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
+         dfreq AS (SELECT tok, count(DISTINCT doc_id) AS df_cnt FROM toks GROUP BY 1),
+         r AS (SELECT doc_id, tok, tf, df_cnt,
+                      row_number() OVER (PARTITION BY doc_id
+                        ORDER BY CAST(tf AS DOUBLE)/df_cnt DESC, tok) AS rank
+               FROM tf JOIN dfreq USING (tok))
+         SELECT doc_id, tok, CAST(tf AS BIGINT) AS tf,
+                CAST(df_cnt AS BIGINT) AS df_cnt, CAST(rank AS INTEGER) AS rank
+         FROM r WHERE rank <= 3"""),
+    Query("t_stratified", (s, dir) => {
       // stratified deterministic sampling: exactly every 5th doc per
       // language stratum in stable doc_id order — balanced class subsets
       // (the eval-set carve-out) with one window shuffle on the stratum
@@ -619,8 +963,13 @@ object TextOps {
         .withColumn("rn", row_number().over(w))
         .filter((col("rn") - 1) % 5 === 0)
         .select(col("doc_id"), col("lang"), col("rn"))
-    }),
-    "t_pack" -> ((s, dir) => {
+    }, oracle =
+      """SELECT doc_id, lang, CAST(rn AS INTEGER) AS rn
+         FROM (SELECT doc_id, lang,
+                      row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
+               FROM documents)
+         WHERE (rn - 1) % 5 = 0"""),
+    Query("t_pack", (s, dir) => {
       // token-budget sequence packing (chunked formulation): docs pack in
       // stable doc_id order into 2048-token bins via a running token count;
       // bin = tokens-before div 2048. Packing runs per shard (doc_id mod 8)
@@ -636,8 +985,20 @@ object TextOps {
           coalesce(sum(col("n_tokens")).over(w), lit(0L)))
         .select(col("doc_id"), col("shard"), col("n_tokens"),
           col("tokens_before"), expr("tokens_before div 2048").as("bin_id"))
-    }),
-    "t_lm_quality" -> ((s, dir) => {
+    }, oracle =
+      """WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
+                           CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens
+                    FROM documents),
+         w AS (SELECT doc_id, shard, n_tokens,
+                      CAST(COALESCE(sum(n_tokens) OVER (
+                        PARTITION BY shard ORDER BY doc_id
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                        AS BIGINT) AS tokens_before
+               FROM t)
+         SELECT doc_id, shard, n_tokens, tokens_before,
+                tokens_before // 2048 AS bin_id
+         FROM w"""),
+    Query("t_lm_quality", (s, dir) => {
       // per-doc FLUENCY score: mean add-one bigram transition probability
       // under the corpus LM (the t_ngram_lm table applied back to the
       // corpus) — typical word sequences score high, gibberish low. The
@@ -666,8 +1027,29 @@ object TextOps {
         .agg(count(lit(1)).as("n_bigrams"),
           round(sum(col("p").cast(DecimalType(28, 16))).cast("double") /
             count(lit(1)), 9).as("mean_p"))
-    }),
-    "t_ngram_lm" -> ((s, dir) => {
+    }, oracle =
+      // p's decimal dividend (c12+1.0) promotes to double exactly, so the
+      // division is the same IEEE op as the engine's; DECIMAL(28,16)
+      // accumulation makes the per-doc sum order-independent
+      """WITH grams AS (
+           SELECT doc_id,
+                  unnest(list_transform(generate_series(1, len(toks) - 1),
+                    i -> toks[i] || ' ' || toks[i+1])) AS pair
+           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+           WHERE len(toks) >= 2),
+         bi AS (SELECT pair, count(*) AS c12 FROM grams GROUP BY 1),
+         sp AS (SELECT pair, c12, string_split(pair, ' ')[1] AS w1 FROM bi),
+         ctx AS (SELECT w1, sum(c12) AS c1 FROM sp GROUP BY 1),
+         v AS (SELECT count(DISTINCT tok) AS v
+               FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)),
+         lm AS (SELECT sp.pair, (sp.c12 + 1.0) / (ctx.c1 + v.v) AS p
+                FROM sp JOIN ctx USING (w1), v)
+         SELECT g.doc_id, count(*) AS n_bigrams,
+                round(CAST(sum(CAST(p AS DECIMAL(28,16))) AS DOUBLE) /
+                      count(*), 9) AS mean_p
+         FROM grams g JOIN lm USING (pair)
+         GROUP BY 1"""),
+    Query("t_ngram_lm", (s, dir) => {
       // bigram LM statistics with add-one smoothing: P(w2|w1) =
       // (c(w1,w2)+1)/(c(w1·)+V) — the conditional-probability table a
       // statistical language model materializes (c(w1·) = w1's total count
@@ -690,8 +1072,22 @@ object TextOps {
           round((col("c12") + lit(1.0)) / (col("c1") + col("v")), 9).as("p"))
         .orderBy(col("c12").desc, col("pair").asc)
         .limit(50)
-    }),
-    "t_source_overlap" -> ((s, dir) => {
+    }, oracle =
+      """WITH grams AS (
+           SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
+                    i -> toks[i] || ' ' || toks[i+1])) AS pair
+           FROM (SELECT string_split(text, ' ') AS toks FROM documents)
+           WHERE len(toks) >= 2),
+         bi AS (SELECT pair, count(*) AS c12 FROM grams GROUP BY 1),
+         sp AS (SELECT pair, c12, string_split(pair, ' ')[1] AS w1 FROM bi),
+         ctx AS (SELECT w1, sum(c12) AS c1 FROM sp GROUP BY 1),
+         v AS (SELECT count(DISTINCT tok) AS v
+               FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents))
+         SELECT sp.pair, CAST(sp.c12 AS BIGINT) AS c12, CAST(ctx.c1 AS BIGINT) AS c1,
+                round((sp.c12 + 1.0) / (ctx.c1 + v.v), 9) AS p
+         FROM sp JOIN ctx USING (w1), v
+         ORDER BY c12 DESC, pair ASC LIMIT 50"""),
+    Query("t_source_overlap", (s, dir) => {
       // cross-source contamination matrix (the C4-style dataset-overlap
       // diagnostic, Dodge et al. EMNLP'21 §4; the dataset-level twin of
       // t_decontaminate's per-doc gate): for every ordered source pair,
@@ -718,8 +1114,24 @@ object TextOps {
         .select(col("src_a"), col("src_b"), col("n_common"), col("n_sh"),
           round(col("n_common").cast("double") / col("n_sh"), 6)
             .as("containment"))
-    }),
-    "t_render_dpo" -> ((s, dir) => {
+    }, oracle =
+      // identical per-source distinct shingle sets, the same shingle-key
+      // pair join, per-source totals re-joined for the containment ratio
+      s"""WITH $shingleSql,
+         ss AS MATERIALIZED (
+           SELECT DISTINCT d.source, s.sh
+           FROM sh s JOIN documents d USING (doc_id)),
+         tot AS (SELECT source, count(*) AS n_sh FROM ss GROUP BY 1),
+         pr AS (SELECT a.source AS src_a, b.source AS src_b,
+                       count(*) AS n_common
+                FROM ss a JOIN ss b
+                  ON a.sh = b.sh AND a.source <> b.source
+                GROUP BY 1, 2)
+         SELECT pr.src_a, pr.src_b, pr.n_common, t.n_sh,
+                round(CAST(pr.n_common AS DOUBLE) / t.n_sh, 6)
+                  AS containment
+         FROM pr JOIN tot t ON pr.src_a = t.source"""),
+    Query("t_render_dpo", (s, dir) => {
       // DPO preference-pair construction (Rafailov et al., NeurIPS'23 —
       // the data step of direct preference optimization: each training
       // record is a (prompt, chosen, rejected) triple; here the pair per
@@ -761,8 +1173,44 @@ object TextOps {
           (col("cs") - col("rs")).as("margin"),
           length(col("record")).as("record_chars"),
           md5(col("record")).as("record_md5"))
-    }),
-    "t_span_corrupt" -> ((s, dir) => {
+    }, oracle =
+      // identical hashed-linear scores, the same argmax/argmin structs
+      // (ties → smallest doc_id on both ends), byte-identical rendering
+      """WITH t AS (SELECT doc_id, source, text,
+                           string_split(text, ' ') AS toks
+                    FROM documents),
+         c AS (SELECT doc_id, source, text, toks,
+                 CAST(list_aggregate(list_transform(toks,
+                   t -> ('0x' || substr(md5('w' ||
+                          CAST(('0x' || substr(md5(t), 1, 6))::BIGINT % 64
+                               AS VARCHAR)), 1, 4))::BIGINT % 2001 - 1000),
+                   'sum') AS BIGINT) AS w_sum
+               FROM t),
+         p AS (SELECT source,
+                 -((max(struct_pack(w := w_sum, nd := -doc_id))).nd)
+                   AS chosen_doc,
+                 (max(struct_pack(w := w_sum, nd := -doc_id))).w AS cs,
+                 (min(struct_pack(w := w_sum, d := doc_id))).d
+                   AS rejected_doc,
+                 (min(struct_pack(w := w_sum, d := doc_id))).w AS rs,
+                 count(*) AS n
+               FROM c GROUP BY 1),
+         r AS (SELECT p.source, p.chosen_doc, p.rejected_doc,
+                      p.cs - p.rs AS margin,
+                      '<|prompt|>' ||
+                        array_to_string(list_slice(ch.toks, 1, 8), ' ') ||
+                        chr(10) || '<|chosen|>' || ch.text ||
+                        chr(10) || '<|rejected|>' || rj.text || '<|end|>'
+                        AS record
+               FROM p
+               JOIN c ch ON p.chosen_doc = ch.doc_id
+               JOIN c rj ON p.rejected_doc = rj.doc_id
+               WHERE p.n >= 2 AND p.chosen_doc <> p.rejected_doc)
+         SELECT source, chosen_doc, rejected_doc, margin,
+                CAST(length(record) AS INTEGER) AS record_chars,
+                md5(record) AS record_md5
+         FROM r"""),
+    Query("t_span_corrupt", (s, dir) => {
       // T5 span corruption (Raffel et al., JMLR'20 §3.1.4 — the
       // denoising objective's DATA step: mask ~15% of tokens in
       // multi-token spans, replace each masked span with one sentinel in
@@ -824,8 +1272,49 @@ object TextOps {
           col("input_md5"),
           coalesce(col("target_md5"),
             lit("d41d8cd98f00b204e9800998ecf8427e")).as("target_md5"))
-    }),
-    "t_bm25" -> ((s, dir) => {
+    }, oracle =
+      // identical md5-fraction masking, sentinel ordinals, and
+      // order-preserving input/target rendering; string_agg(ORDER BY pos)
+      // replays the sort-by-position collect
+      """WITH ex AS MATERIALIZED (
+           SELECT doc_id, i - 1 AS pos, tok, (i - 1) // 3 AS span,
+                  (('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':'
+                      || CAST((i - 1) // 3 AS VARCHAR)), 1, 6))::BIGINT
+                    < 2516582) AS masked
+           FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
+                        generate_subscripts(string_split(text, ' '), 1) AS i
+                 FROM documents)),
+         spanord AS (
+           SELECT doc_id, span,
+                  row_number() OVER (PARTITION BY doc_id ORDER BY span) AS k
+           FROM (SELECT DISTINCT doc_id, span FROM ex WHERE masked)),
+         withk AS (SELECT e.*, s.k FROM ex e
+                   LEFT JOIN spanord s USING (doc_id, span)),
+         inp AS (
+           SELECT doc_id, md5(string_agg(item, ' ' ORDER BY pos)) AS input_md5
+           FROM (SELECT doc_id, pos,
+                   CASE WHEN masked THEN '<X' || CAST(k AS VARCHAR) || '>'
+                        ELSE tok END AS item
+                 FROM withk WHERE NOT masked OR pos % 3 = 0)
+           GROUP BY 1),
+         tgt AS (
+           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens_masked,
+                  CAST(count(DISTINCT span) AS BIGINT) AS n_spans_masked,
+                  md5(string_agg(item, ' ' ORDER BY pos)) AS target_md5
+           FROM (SELECT doc_id, pos, span,
+                   CASE WHEN pos % 3 = 0
+                        THEN '<X' || CAST(k AS VARCHAR) || '> ' || tok
+                        ELSE tok END AS item
+                 FROM withk WHERE masked)
+           GROUP BY 1)
+         SELECT d.doc_id,
+                COALESCE(t.n_spans_masked, 0) AS n_spans_masked,
+                COALESCE(t.n_tokens_masked, 0) AS n_tokens_masked,
+                i.input_md5,
+                COALESCE(t.target_md5, md5('')) AS target_md5
+         FROM documents d JOIN inp i USING (doc_id)
+         LEFT JOIN tgt t USING (doc_id)"""),
+    Query("t_bm25", (s, dir) => {
       // Okapi BM25 scoring (Robertson & Spärck Jones; the BM25 of
       // Robertson et al. TREC-3) — THE lexical retrieval baseline every
       // hybrid (sparse+dense) serving stack still runs next to ANN:
@@ -871,8 +1360,35 @@ object TextOps {
         .orderBy(col("sc").desc, col("doc_id").asc)
         .limit(20)
         .select(col("doc_id"), col("n_terms"), round(col("sc"), 6).as("score"))
-    }),
-    "t_kn_lm" -> ((s, dir) => {
+    }, oracle =
+      // identical tf/df/stats reductions and the identically-parenthesized
+      // IEEE chain; the per-term score casts to DECIMAL(28,16) before the
+      // per-doc sum so accumulation order cannot matter
+      """WITH d AS (
+           SELECT doc_id, string_split(text, ' ') AS toks,
+                  len(string_split(text, ' ')) AS len
+           FROM documents),
+         stats AS (SELECT count(*) AS n_docs,
+                          CAST(sum(CAST(len AS DECIMAL(28,6))) AS DOUBLE)
+                            AS sum_len
+                   FROM d),
+         tf AS (SELECT doc_id, len, tok, count(*) AS tf
+                FROM (SELECT doc_id, len, unnest(toks) AS tok FROM d)
+                WHERE tok IN ('hash', 'merge', 'vector')
+                GROUP BY 1, 2, 3),
+         dfx AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
+         ts AS (SELECT doc_id,
+                  CAST((n_docs - df + 0.5) / (df + 0.5)
+                       * (tf * 2.2)
+                       / (tf + 1.2 * (0.25 + 0.75 * len / (sum_len / n_docs)))
+                    AS DECIMAL(28,16)) AS term_score
+                FROM tf JOIN dfx USING (tok), stats)
+         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms,
+                round(CAST(sum(term_score) AS DOUBLE), 6) AS score
+         FROM ts GROUP BY 1
+         ORDER BY CAST(sum(term_score) AS DOUBLE) DESC, doc_id ASC
+         LIMIT 20"""),
+    Query("t_kn_lm", (s, dir) => {
       // interpolated Kneser–Ney bigram smoothing (Kneser & Ney ICASSP'95;
       // Chen & Goodman CSL'99 crowned it the best-performing n-gram
       // smoother — it is what KenLM implements and what CCNet's quality
@@ -910,8 +1426,33 @@ object TextOps {
                 * (col("n1_prec") / col("nb")), 9).as("p_kn"))
         .orderBy(col("c12").desc, col("pair").asc)
         .limit(50)
-    }),
-    "t_kn_score" -> ((s, dir) => {
+    }, oracle =
+      // the identical four integer statistics off one bigram frame and the
+      // identically-parenthesized IEEE chain (D = 0.75 exactly
+      // representable; / is float division in both engines)
+      """WITH grams AS (
+           SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
+                    i -> toks[i] || ' ' || toks[i+1])) AS pair
+           FROM (SELECT string_split(text, ' ') AS toks FROM documents)
+           WHERE len(toks) >= 2),
+         bi AS MATERIALIZED (
+           SELECT pair, count(*) AS c12,
+                  string_split(pair, ' ')[1] AS w1,
+                  string_split(pair, ' ')[2] AS w2
+           FROM grams GROUP BY 1),
+         ctx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1,
+                        count(*) AS n1_fwd
+                 FROM bi GROUP BY 1),
+         prec AS (SELECT w2, count(*) AS n1_prec FROM bi GROUP BY 1),
+         total AS (SELECT count(*) AS nb FROM bi)
+         SELECT bi.pair, CAST(bi.c12 AS BIGINT) AS c12, ctx.c1,
+                ctx.n1_fwd, prec.n1_prec,
+                round(greatest(bi.c12 - 0.75, 0.0) / ctx.c1
+                      + ((0.75 * ctx.n1_fwd) / ctx.c1)
+                        * (prec.n1_prec / total.nb), 9) AS p_kn
+         FROM bi JOIN ctx USING (w1) JOIN prec USING (w2), total
+         ORDER BY c12 DESC, pair ASC LIMIT 50"""),
+    Query("t_kn_score", (s, dir) => {
       // the CCNet filter shape PROPER (Wenzek et al. LREC 2020): a
       // Kneser–Ney LM TRAINED on the clean split scores the WHOLE corpus
       // — t_kn_lm builds the model, this op deploys it. Train = the
@@ -965,8 +1506,54 @@ object TextOps {
             .as("n_oov_ctx"),
           round(sum(col("p").cast(DecimalType(28, 16))).cast("double")
             / count(lit(1)), 9).as("mean_p"))
-    }),
-    "t_bpe_pairs" -> ((s, dir) =>
+    }, oracle =
+      // the t_kn_lm statistics CTEs restricted to the train split, then
+      // the identical left-join apply with the identically-parenthesized
+      // backoff chain (integer/integer division is float division in
+      // both engines; the decimal per-doc sum is order-independent)
+      """WITH tg AS (
+           SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 1),
+                    i -> toks[i] || ' ' || toks[i+1])) AS pair
+           FROM (SELECT doc_id, string_split(text, ' ') AS toks
+                 FROM documents WHERE doc_id % 5 = 0)
+           WHERE len(toks) >= 2),
+         bi AS MATERIALIZED (
+           SELECT pair, count(*) AS c12,
+                  string_split(pair, ' ')[1] AS w1,
+                  string_split(pair, ' ')[2] AS w2
+           FROM tg GROUP BY 1),
+         ctx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1,
+                        count(*) AS n1_fwd
+                 FROM bi GROUP BY 1),
+         prec AS (SELECT w2, count(*) AS n1_prec FROM bi GROUP BY 1),
+         total AS (SELECT count(*) AS nb FROM bi),
+         cg AS (SELECT doc_id, pair,
+                       string_split(pair, ' ')[1] AS w1,
+                       string_split(pair, ' ')[2] AS w2
+                FROM (SELECT doc_id,
+                        unnest(list_transform(generate_series(1, len(toks) - 1),
+                          i -> toks[i] || ' ' || toks[i+1])) AS pair
+                      FROM (SELECT doc_id, string_split(text, ' ') AS toks
+                            FROM documents)
+                      WHERE len(toks) >= 2)),
+         sc AS (SELECT cg.doc_id,
+                  CASE WHEN ctx.c1 IS NOT NULL THEN
+                    greatest(COALESCE(bi.c12, 0) - 0.75, 0.0) / ctx.c1
+                      + ((0.75 * ctx.n1_fwd) / ctx.c1)
+                        * (COALESCE(prec.n1_prec, 0) / total.nb)
+                  ELSE COALESCE(prec.n1_prec, 0) / total.nb END AS p,
+                  CASE WHEN ctx.c1 IS NULL THEN 1 ELSE 0 END AS oov
+                FROM cg
+                LEFT JOIN bi ON cg.pair = bi.pair
+                LEFT JOIN ctx ON cg.w1 = ctx.w1
+                LEFT JOIN prec ON cg.w2 = prec.w2
+                CROSS JOIN total)
+         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+                CAST(sum(oov) AS BIGINT) AS n_oov_ctx,
+                round(CAST(sum(CAST(p AS DECIMAL(28,16))) AS DOUBLE)
+                  / count(*), 9) AS mean_p
+         FROM sc GROUP BY 1"""),
+    Query("t_bpe_pairs", (s, dir) =>
       // corpus-global adjacent-pair frequencies — the merge-candidate
       // statistic a BPE/WordPiece tokenizer trainer recomputes each round
       // (here over whitespace tokens; the real trainer iterates the same
@@ -979,8 +1566,15 @@ object TextOps {
           TextFunctions.tokens(col("text")), 2)).as("pair"))
         .groupBy("pair").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("pair").asc)
-        .limit(20)),
-    "t_decontaminate" -> ((s, dir) => {
+        .limit(20), oracle =
+      """WITH grams AS (
+           SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
+                    i -> toks[i] || ' ' || toks[i+1])) AS pair
+           FROM (SELECT string_split(text, ' ') AS toks FROM documents)
+           WHERE len(toks) >= 2)
+         SELECT pair, count(*) AS n FROM grams
+         GROUP BY 1 ORDER BY n DESC, pair ASC LIMIT 20"""),
+    Query("t_decontaminate", (s, dir) => {
       // benchmark decontamination: score every training doc by the fraction
       // of its distinct 3-gram shingles that appear in a held-out benchmark
       // set (source 'src0' stands in for the eval suite). The overlap test
@@ -999,8 +1593,19 @@ object TextOps {
       sizes.join(hits, Seq("doc_id"))
         .withColumn("overlap",
           round(col("n_hit").cast("double") / col("n_sh"), 6))
-    }),
-    "t_confusion" -> ((s, dir) => {
+    }, oracle =
+      s"""WITH $shingleSql,
+         corpus AS (SELECT s.doc_id, s.sh FROM sh s JOIN documents d USING(doc_id)
+                    WHERE d.source <> 'src0'),
+         bench AS (SELECT DISTINCT s.sh FROM sh s JOIN documents d USING(doc_id)
+                   WHERE d.source = 'src0'),
+         sizes AS (SELECT doc_id, count(*) AS n_sh FROM corpus GROUP BY 1),
+         hits AS (SELECT doc_id, count(*) AS n_hit FROM corpus
+                  WHERE sh IN (SELECT sh FROM bench) GROUP BY 1)
+         SELECT s.doc_id, s.n_sh, h.n_hit,
+                round(CAST(h.n_hit AS DOUBLE) / s.n_sh, 6) AS overlap
+         FROM sizes s JOIN hits h USING(doc_id)"""),
+    Query("t_confusion", (s, dir) => {
       // classifier evaluation: confusion matrix of the langid vote vs the
       // labeled language, with per-cell recall (row-normalized) and
       // precision (column-normalized) fractions — the eval artifact every
@@ -1017,8 +1622,30 @@ object TextOps {
         .withColumn("precision_frac",
           round(col("n").cast("double") /
             sum("n").over(Window.partitionBy("pred_lang")), 6))
-    }),
-    "t_calibration" -> ((s, dir) => {
+    }, oracle =
+      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
+         c AS (SELECT doc_id, lang,
+                 len(list_filter(toks, x -> x IN ('the','a','of','and','is'))) AS n_en,
+                 len(list_filter(toks, x -> x IN ('el','la','los','es','y'))) AS n_es,
+                 len(list_filter(toks, x -> x IN ('le','les','des','et','est'))) AS n_fr,
+                 len(list_filter(toks, x -> x IN ('der','die','das','und','ist'))) AS n_de,
+                 len(list_filter(toks, x -> x IN ('de0','shi4','le0','zai4','wo3'))) AS n_zh
+               FROM t),
+         p AS (SELECT lang,
+                 CASE WHEN n_zh > greatest(n_en, n_es, n_fr, n_de) THEN 'zh'
+                      WHEN n_de > greatest(n_en, n_es, n_fr) THEN 'de'
+                      WHEN n_fr > greatest(n_en, n_es) THEN 'fr'
+                      WHEN n_es > n_en THEN 'es'
+                      ELSE 'en' END AS pred_lang
+               FROM c),
+         cm AS (SELECT lang, pred_lang, count(*) AS n FROM p GROUP BY 1, 2)
+         SELECT lang, pred_lang, n,
+                round(CAST(n AS DOUBLE) /
+                  sum(n) OVER (PARTITION BY lang), 6) AS recall_frac,
+                round(CAST(n AS DOUBLE) /
+                  sum(n) OVER (PARTITION BY pred_lang), 6) AS precision_frac
+         FROM cm"""),
+    Query("t_calibration", (s, dir) => {
       // classifier calibration curve (reliability diagram): bin the langid
       // vote's confidence (winning marker count / tokens) and report per-bin
       // observed accuracy — THE artifact that tells a pipeline whether its
@@ -1042,8 +1669,34 @@ object TextOps {
             / count(lit(1)), 6).as("mean_conf"),
           round(sum(when(col("pred_lang") === col("lang"), 1L).otherwise(0L))
             .cast("double") / count(lit(1)), 6).as("accuracy"))
-    }),
-    "t_redact" -> ((s, dir) => {
+    }, oracle =
+      // all-integer bin; mean_conf via exact decimal sum over identical
+      // IEEE divisions; accuracy one division of exact integers
+      """WITH t AS (SELECT lang, string_split(text, ' ') AS toks FROM documents),
+         c AS (SELECT lang,
+                 CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','is'))) AS INTEGER) AS n_en,
+                 CAST(len(list_filter(toks, x -> x IN ('el','la','los','es','y'))) AS INTEGER) AS n_es,
+                 CAST(len(list_filter(toks, x -> x IN ('le','les','des','et','est'))) AS INTEGER) AS n_fr,
+                 CAST(len(list_filter(toks, x -> x IN ('der','die','das','und','ist'))) AS INTEGER) AS n_de,
+                 CAST(len(list_filter(toks, x -> x IN ('de0','shi4','le0','zai4','wo3'))) AS INTEGER) AS n_zh,
+                 CAST(len(toks) AS INTEGER) AS n_toks
+               FROM t),
+         s AS (SELECT lang,
+                 CASE WHEN n_zh > greatest(n_en, n_es, n_fr, n_de) THEN 'zh'
+                      WHEN n_de > greatest(n_en, n_es, n_fr) THEN 'de'
+                      WHEN n_fr > greatest(n_en, n_es) THEN 'fr'
+                      WHEN n_es > n_en THEN 'es'
+                      ELSE 'en' END AS pred_lang,
+                 greatest(n_en, n_es, n_fr, n_de, n_zh) AS win, n_toks
+               FROM c)
+         SELECT CAST((win * 20) // n_toks AS INTEGER) AS bin,
+                count(*) AS n_docs,
+                round(CAST(sum(CAST(CAST(win AS DOUBLE) / CAST(n_toks AS DOUBLE)
+                                    AS DECIMAL(28,16))) AS DOUBLE) / count(*), 6) AS mean_conf,
+                round(CAST(sum(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END) AS DOUBLE)
+                      / count(*), 6) AS accuracy
+         FROM s GROUP BY 1"""),
+    Query("t_redact", (s, dir) => {
       // regex scrub pass — the PII-redaction shape (emails/ids/phone masks)
       // over a denylist of word patterns, entirely per-row so it fuses into
       // the scan's codegen stage. Both engines use RE2-compatible syntax
@@ -1055,8 +1708,13 @@ object TextOps {
         regexp_count(col("text"), lit(pat)).as("n_hits"),
         length(red).as("red_len"),
         md5(red).as("red_hash"))
-    }),
-    "t_dup_spans" -> ((s, dir) => {
+    }, oracle =
+      """SELECT doc_id,
+                CAST(len(regexp_extract_all(text, '\b(customer|order|spark)\b')) AS INTEGER) AS n_hits,
+                CAST(length(regexp_replace(text, '\b(customer|order|spark)\b', '<x>', 'g')) AS INTEGER) AS red_len,
+                md5(regexp_replace(text, '\b(customer|order|spark)\b', '<x>', 'g')) AS red_hash
+         FROM documents"""),
+    Query("t_dup_spans", (s, dir) => {
       // cross-document duplicated-span profile: for each doc, the fraction
       // of its distinct 8-gram spans that occur in at least one OTHER doc —
       // the n-gram formulation of exact substring dedup (Lee et al.,
@@ -1075,10 +1733,27 @@ object TextOps {
         .withColumn("n_dup", coalesce(col("n_dup"), lit(0L)))
         .withColumn("dup_ratio",
           round(col("n_dup").cast("double") / col("n_spans"), 6))
-    }),
-    "d_exact" -> ((s, dir) =>
-      TextDedup.exactGroups(docs(s, dir), "doc_id", "text")),
-    "d_dup_span_extract" -> ((s, dir) => {
+    }, oracle =
+      """WITH sp AS (
+           SELECT doc_id, unnest(list_distinct(list_transform(
+                    generate_series(1, len(toks) - 7),
+                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' ||
+                         toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5] || ' ' ||
+                         toks[i+6] || ' ' || toks[i+7]))) AS sh
+           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+           WHERE len(toks) >= 8),
+         dfreq AS (SELECT sh, count(DISTINCT doc_id) AS df_cnt FROM sp GROUP BY 1),
+         sizes AS (SELECT doc_id, count(*) AS n_spans FROM sp GROUP BY 1),
+         dups AS (SELECT doc_id, count(*) AS n_dup
+                  FROM sp JOIN dfreq USING (sh) WHERE df_cnt >= 2 GROUP BY 1)
+         SELECT s.doc_id, s.n_spans, COALESCE(d.n_dup, 0) AS n_dup,
+                round(CAST(COALESCE(d.n_dup, 0) AS DOUBLE) / s.n_spans, 6) AS dup_ratio
+         FROM sizes s LEFT JOIN dups d USING (doc_id)"""),
+    Query("d_exact", (s, dir) =>
+      TextDedup.exactGroups(docs(s, dir), "doc_id", "text"), oracle =
+      """SELECT md5(text) AS text_hash, count(*) AS n_copies, min(doc_id) AS keep_id
+         FROM documents GROUP BY 1"""),
+    Query("d_dup_span_extract", (s, dir) => {
       // the REMOVAL step of exact-substring dedup (Lee et al. ACL'22):
       // t_dup_spans reports how duplicated a doc is; this op emits WHICH
       // token ranges to cut — every maximal span covered by duplicated
@@ -1091,8 +1766,35 @@ object TextOps {
       // map-side-combinable agg on the gram key, the island pass sorts
       // only the DUPLICATED positions per doc — never the corpus.
       dupSpans(docs(s, dir))
-    }),
-    "d_dedup_cut" -> ((s, dir) => {
+    }, oracle =
+      // positional 8-token windows (1-based i → 0-based pos), global
+      // occ >= 2, then the same gaps-and-islands merge (running max end,
+      // new island when pos > prev_end)
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+         w AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 7)) AS i
+               FROM t WHERE len(toks) >= 8),
+         g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
+                      array_to_string(toks[i:i+7], ' ') AS gram
+               FROM w),
+         f AS (SELECT gram, count(*) AS occ FROM g GROUP BY 1),
+         d AS (SELECT doc_id, pos FROM g JOIN f USING (gram) WHERE occ >= 2),
+         m AS (SELECT doc_id, pos,
+                 max(pos + 7) OVER (PARTITION BY doc_id ORDER BY pos
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
+               FROM d),
+         fl AS (SELECT doc_id, pos,
+                  CASE WHEN prev_end IS NULL OR pos > prev_end
+                       THEN 1 ELSE 0 END AS ni
+                FROM m),
+         gr AS (SELECT doc_id, pos,
+                  sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+                FROM fl)
+         SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
+                CAST(max(pos) + 7 AS BIGINT) AS span_end,
+                count(*) AS n_windows
+         FROM gr GROUP BY doc_id, island"""),
+    Query("d_dedup_cut", (s, dir) => {
       // ...and the CUT itself, hash-gated end to end: every token inside
       // a duplicated span is removed and the md5 of the re-joined
       // remainder is the gate — so window detection, island merge, range
@@ -1123,8 +1825,50 @@ object TextOps {
         .select(col("doc_id"),
           coalesce(col("n_tokens_kept"), lit(0L)).as("n_tokens_kept"),
           coalesce(col("cleaned_hash"), md5(lit(""))).as("cleaned_hash"))
-    }),
-    "d_line_dedup" -> ((s, dir) => {
+    }, oracle =
+      // the span replay (identical CTE chain) + positional token table,
+      // NOT EXISTS range anti join, order-preserving string_agg, md5 gate;
+      // fully-cut docs surface as (0, md5(''))
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+         w AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 7)) AS i
+               FROM t WHERE len(toks) >= 8),
+         g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
+                      array_to_string(toks[i:i+7], ' ') AS gram
+               FROM w),
+         f AS (SELECT gram, count(*) AS occ FROM g GROUP BY 1),
+         d AS (SELECT doc_id, pos FROM g JOIN f USING (gram) WHERE occ >= 2),
+         m AS (SELECT doc_id, pos,
+                 max(pos + 7) OVER (PARTITION BY doc_id ORDER BY pos
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
+               FROM d),
+         fl AS (SELECT doc_id, pos,
+                  CASE WHEN prev_end IS NULL OR pos > prev_end
+                       THEN 1 ELSE 0 END AS ni
+                FROM m),
+         gr AS (SELECT doc_id, pos,
+                  sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+                FROM fl),
+         spans AS (SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
+                          CAST(max(pos) + 7 AS BIGINT) AS span_end
+                   FROM gr GROUP BY doc_id, island),
+         tok AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, toks[i] AS tok
+                 FROM (SELECT doc_id, toks,
+                              unnest(generate_series(1, len(toks))) AS i
+                       FROM t)),
+         kept AS (SELECT k.doc_id, k.pos, k.tok FROM tok k
+                  WHERE NOT EXISTS (
+                    SELECT 1 FROM spans s
+                    WHERE s.doc_id = k.doc_id
+                      AND k.pos BETWEEN s.span_start AND s.span_end)),
+         agg AS (SELECT doc_id, count(*) AS n_tokens_kept,
+                   md5(string_agg(tok, ' ' ORDER BY pos)) AS cleaned_hash
+                 FROM kept GROUP BY 1)
+         SELECT dd.doc_id,
+                CAST(COALESCE(a.n_tokens_kept, 0) AS BIGINT) AS n_tokens_kept,
+                COALESCE(a.cleaned_hash, md5('')) AS cleaned_hash
+         FROM documents dd LEFT JOIN agg a USING (doc_id)"""),
+    Query("d_line_dedup", (s, dir) => {
       // LINE-level boilerplate dedup (the CCNet/RefinedWeb pre-filter):
       // web corpora carry nav bars / cookie banners / footers repeated
       // verbatim across millions of pages, removed by hashing LINES and
@@ -1149,21 +1893,77 @@ object TextOps {
           sum(when(col("line_df") >= 2, 1L).otherwise(0L)).as("n_boiler"))
         .withColumn("boiler_ratio",
           round(col("n_boiler").cast("double") / col("n_lines"), 6))
-    }),
-    "d_ngram_jaccard" -> ((s, dir) =>
+    }, oracle =
+      // same fixed 8-token chunking ((len+7)//8 lines, inclusive-slice
+      // semantics match Spark's slice(t, i*8+1, 8)), same df >= 2 rule
+      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+         lines AS (
+           SELECT doc_id, unnest(list_transform(range(0, (len(t)+7)//8),
+                    i -> array_to_string(t[i*8+1:i*8+8], ' '))) AS line
+           FROM toks),
+         lf AS (SELECT line, count(DISTINCT doc_id) AS line_df FROM lines GROUP BY 1)
+         SELECT doc_id, count(*) AS n_lines,
+                CAST(sum(CASE WHEN line_df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
+                round(CAST(sum(CASE WHEN line_df >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
+                      / count(*), 6) AS boiler_ratio
+         FROM lines JOIN lf USING (line) GROUP BY doc_id"""),
+    Query("d_ngram_jaccard", (s, dir) =>
       // threshold 3/10 = Jaccard >= 0.3 over distinct word 3-grams; the
       // stop-shingle cap (df <= 1000) is mirrored in the oracle's candidate
       // generation so engine and oracle agree at ANY scale factor, not just
       // ones where no shingle exceeds the cap
       TextDedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", 3, 3, 10,
-        maxShingleDf = 1000)),
-    "d_ppjoin" -> ((s, dir) =>
+        maxShingleDf = 1000), oracle =
+      // mirrors the engine's two-phase plan exactly: candidates must share
+      // >= 1 RARE shingle (doc-frequency <= 1000, the stop-shingle cap);
+      // the intersection is then exact over the FULL shingle sets, so the
+      // Jaccard value is unbiased by the cap
+      s"""WITH $shingleSql,
+         dfreq AS (SELECT sh, count(*) AS df_cnt FROM sh GROUP BY 1),
+         rare AS (SELECT s.doc_id, s.sh FROM sh s JOIN dfreq USING (sh)
+                  WHERE df_cnt <= 1000),
+         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                  FROM rare a JOIN rare b ON a.sh = b.sh AND a.doc_id < b.doc_id),
+         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+         p AS (SELECT doc_a, doc_b, count(*) AS inter_cnt
+               FROM cand
+               JOIN sh a ON a.doc_id = cand.doc_a
+               JOIN sh b ON b.doc_id = cand.doc_b AND b.sh = a.sh
+               GROUP BY 1, 2)
+         SELECT doc_a, doc_b, CAST(inter_cnt AS BIGINT) AS inter_cnt,
+                round(CAST(inter_cnt AS DOUBLE)/(sa.n + sb.n - inter_cnt), 6) AS jaccard
+         FROM p JOIN sz sa ON p.doc_a = sa.doc_id JOIN sz sb ON p.doc_b = sb.doc_id
+         WHERE inter_cnt * 10 >= (sa.n + sb.n - inter_cnt) * 3"""),
+    Query("d_ppjoin", (s, dir) =>
       // prefix-filtered Jaccard join (PPJoin candidate rule) at the SAME
       // 3/10 threshold as d_ngram_jaccard: provably complete candidates,
       // so both queries must return identical pairs — two independent
       // algorithms cross-checking each other through their oracles
-      TextDedup.ppjoinPairs(docs(s, dir), "doc_id", "text", 3, 3, 10)),
-    "d_ppjoin_capped" -> ((s, dir) => {
+      TextDedup.ppjoinPairs(docs(s, dir), "doc_id", "text", 3, 3, 10), oracle =
+      // mirrors the engine's prefix rule: per-doc (df, shingle) order,
+      // prefix size n - ceil(3n/10) + 1, exact intersection over full sets
+      s"""WITH $shingleSql,
+         dfreq AS (SELECT sh, count(*) AS df_cnt FROM sh GROUP BY 1),
+         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+         pre AS (SELECT doc_id, sh FROM (
+                   SELECT s.doc_id, s.sh,
+                          row_number() OVER (PARTITION BY s.doc_id
+                            ORDER BY d.df_cnt, s.sh) AS rn,
+                          z.n
+                   FROM sh s JOIN dfreq d USING (sh) JOIN sz z USING (doc_id))
+                 WHERE rn <= n - ((3 * n + 9) // 10) + 1),
+         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                  FROM pre a JOIN pre b ON a.sh = b.sh AND a.doc_id < b.doc_id),
+         p AS (SELECT doc_a, doc_b, count(*) AS inter_cnt
+               FROM cand
+               JOIN sh a ON a.doc_id = cand.doc_a
+               JOIN sh b ON b.doc_id = cand.doc_b AND b.sh = a.sh
+               GROUP BY 1, 2)
+         SELECT doc_a, doc_b, CAST(inter_cnt AS BIGINT) AS inter_cnt,
+                round(CAST(inter_cnt AS DOUBLE)/(sa.n + sb.n - inter_cnt), 6) AS jaccard
+         FROM p JOIN sz sa ON p.doc_a = sa.doc_id JOIN sz sb ON p.doc_b = sb.doc_id
+         WHERE inter_cnt * 10 >= (sa.n + sb.n - inter_cnt) * 3"""),
+    Query("d_ppjoin_capped", (s, dir) => {
       // the DEPLOYMENT path of d_ppjoin, now oracle-gated end to end: the
       // hot-prefix-key cap is derived from the corpus itself by the EXACT
       // rank-based calibration (value at ascending rank ⌈0.99·k⌉ of the
@@ -1185,17 +1985,88 @@ object TextOps {
       val cap = TextDedup.derivePrefixDfCapExactFrom(prefix)
       TextDedup.ppjoinPairs(d, "doc_id", "text", 3, 3, 10,
         maxPrefixDf = cap, prefixOverride = Some(prefix))
-    }),
-    "d_containment" -> ((s, dir) =>
+    }, oracle =
+      // the d_ppjoin replay with the exact rank-derived cap: the value at
+      // ascending rank ceil(0.99·k) of the prefix-key frequency table
+      // (total order (f, sh)), ×4, floored at 16; keys above it leave the
+      // candidate join. Both engines derive the identical integer cap.
+      s"""WITH $shingleSql,
+         dfreq AS (SELECT sh, count(*) AS df_cnt FROM sh GROUP BY 1),
+         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+         pre AS (SELECT doc_id, sh FROM (
+                   SELECT s.doc_id, s.sh,
+                          row_number() OVER (PARTITION BY s.doc_id
+                            ORDER BY d.df_cnt, s.sh) AS rn,
+                          z.n
+                   FROM sh s JOIN dfreq d USING (sh) JOIN sz z USING (doc_id))
+                 WHERE rn <= n - ((3 * n + 9) // 10) + 1),
+         pfreq AS (SELECT sh, count(*) AS pf FROM pre GROUP BY 1),
+         kq AS (SELECT count(*) AS k FROM pfreq),
+         qv AS (SELECT max(pf) AS q FROM (
+                  SELECT pf FROM pfreq ORDER BY pf ASC, sh ASC
+                  LIMIT (SELECT CAST(ceil(0.99 * k) AS BIGINT) FROM kq))),
+         cap AS (SELECT greatest(16, least(q * 4, 2147483647)) AS c FROM qv),
+         keep AS (SELECT p.doc_id, p.sh FROM pre p JOIN pfreq USING (sh), cap
+                  WHERE pf <= c),
+         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                  FROM keep a JOIN keep b ON a.sh = b.sh AND a.doc_id < b.doc_id),
+         p AS (SELECT doc_a, doc_b, count(*) AS inter_cnt
+               FROM cand
+               JOIN sh a ON a.doc_id = cand.doc_a
+               JOIN sh b ON b.doc_id = cand.doc_b AND b.sh = a.sh
+               GROUP BY 1, 2)
+         SELECT doc_a, doc_b, CAST(inter_cnt AS BIGINT) AS inter_cnt,
+                round(CAST(inter_cnt AS DOUBLE)/(sa.n + sb.n - inter_cnt), 6) AS jaccard
+         FROM p JOIN sz sa ON p.doc_a = sa.doc_id JOIN sz sb ON p.doc_b = sb.doc_id
+         WHERE inter_cnt * 10 >= (sa.n + sb.n - inter_cnt) * 3"""),
+    Query("d_containment", (s, dir) =>
       // asymmetric containment >= 7/10 (Broder SEQUENCES'97): catches
       // snippets/quotes swallowed by larger docs that Jaccard's union
       // denominator hides; directed pairs, rational threshold
       TextDedup.containmentPairs(docs(s, dir), "doc_id", "text", 3, 7, 10,
-        maxShingleDf = 1000)),
-    "d_minhash_lsh" -> ((s, dir) =>
+        maxShingleDf = 1000), oracle =
+      // same candidate discipline as the engine: rare-shingle (df <= 1000)
+      // candidates, exact intersection over full sets, then BOTH directions
+      // scored against the source doc's own shingle count
+      s"""WITH $shingleSql,
+         dfreq AS (SELECT sh, count(*) AS df_cnt FROM sh GROUP BY 1),
+         rare AS (SELECT s.doc_id, s.sh FROM sh s JOIN dfreq USING (sh)
+                  WHERE df_cnt <= 1000),
+         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                  FROM rare a JOIN rare b ON a.sh = b.sh AND a.doc_id < b.doc_id),
+         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+         p AS (SELECT doc_a, doc_b, count(*) AS inter_cnt
+               FROM cand
+               JOIN sh a ON a.doc_id = cand.doc_a
+               JOIN sh b ON b.doc_id = cand.doc_b AND b.sh = a.sh
+               GROUP BY 1, 2),
+         directed AS (SELECT doc_a, doc_b, inter_cnt FROM p
+                      UNION ALL
+                      SELECT doc_b AS doc_a, doc_a AS doc_b, inter_cnt FROM p)
+         SELECT d.doc_a, d.doc_b, CAST(d.inter_cnt AS BIGINT) AS inter_cnt,
+                CAST(sa.n AS BIGINT) AS n_a,
+                round(CAST(d.inter_cnt AS DOUBLE) / sa.n, 6) AS containment
+         FROM directed d JOIN sz sa ON d.doc_a = sa.doc_id
+         WHERE d.inter_cnt * 10 >= sa.n * 7"""),
+    Query("d_minhash_lsh", (s, dir) =>
       // 15 hashes, 5 bands × 3 rows — candidates from band collisions
-      TextDedup.minhashLshPairs(docs(s, dir), "doc_id", "text", 3, 15, 3)),
-    "d_dedup_eval" -> ((s, dir) => {
+      TextDedup.minhashLshPairs(docs(s, dir), "doc_id", "text", 3, 15, 3), oracle =
+      s"""WITH $shingleSql,
+         sigs AS (SELECT doc_id, seed, min(md5(sh || ':' || CAST(seed AS VARCHAR))) AS sig
+                  FROM sh, (SELECT unnest(generate_series(0, 14)) AS seed) s GROUP BY 1, 2),
+         bands AS (SELECT doc_id, seed // 3 AS band,
+                          md5(string_agg(sig, ',' ORDER BY seed)) AS bkey
+                   FROM sigs GROUP BY 1, 2),
+         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                  FROM bands a JOIN bands b
+                    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)
+         SELECT doc_a, doc_b,
+                CAST(sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS BIGINT) AS n_equal,
+                round(CAST(sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS DOUBLE)/15, 6) AS est_sim
+         FROM cand JOIN sigs sa ON cand.doc_a = sa.doc_id
+                   JOIN sigs sb ON cand.doc_b = sb.doc_id AND sa.seed = sb.seed
+         GROUP BY doc_a, doc_b"""),
+    Query("d_dedup_eval", (s, dir) => {
       // dedup-rollout acceptance gate, hash-gated like v_recall_eval:
       // precision/recall of the MinHash-LSH path (n_equal ≥ 4, est_sim
       // ≥ 4/15 ≈ 0.27 — deliberately just UNDER the truth threshold so
@@ -1221,8 +2092,51 @@ object TextOps {
             .as("prec"),
           round(col("n_tp").cast("double") / col("n_truth").cast("double"), 6)
             .as("rec"))
-    }),
-    "d_cascade" -> ((s, dir) => {
+    }, oracle =
+      // both declared pipelines' oracle bodies composed over one shared
+      // shingle CTE; thresholds as the same rationals
+      s"""WITH $shingleSql,
+         dfreq AS (SELECT sh, count(*) AS df_cnt FROM sh GROUP BY 1),
+         rare AS (SELECT s.doc_id, s.sh FROM sh s JOIN dfreq USING (sh)
+                  WHERE df_cnt <= 1000),
+         candt AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                   FROM rare a JOIN rare b ON a.sh = b.sh AND a.doc_id < b.doc_id),
+         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+         pt AS (SELECT doc_a, doc_b, count(*) AS inter_cnt
+                FROM candt
+                JOIN sh a ON a.doc_id = candt.doc_a
+                JOIN sh b ON b.doc_id = candt.doc_b AND b.sh = a.sh
+                GROUP BY 1, 2),
+         truth AS (SELECT doc_a, doc_b
+                   FROM pt JOIN sz sa ON pt.doc_a = sa.doc_id
+                           JOIN sz sb ON pt.doc_b = sb.doc_id
+                   WHERE inter_cnt * 10 >= (sa.n + sb.n - inter_cnt) * 3),
+         sigs AS (SELECT doc_id, seed, min(md5(sh || ':' || CAST(seed AS VARCHAR))) AS sig
+                  FROM sh, (SELECT unnest(generate_series(0, 14)) AS seed) s GROUP BY 1, 2),
+         bands AS (SELECT doc_id, seed // 3 AS band,
+                          md5(string_agg(sig, ',' ORDER BY seed)) AS bkey
+                   FROM sigs GROUP BY 1, 2),
+         candp AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                   FROM bands a JOIN bands b
+                     ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+         pred AS (SELECT doc_a, doc_b
+                  FROM (SELECT doc_a, doc_b,
+                               sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS n_equal
+                        FROM candp JOIN sigs sa ON candp.doc_a = sa.doc_id
+                                   JOIN sigs sb ON candp.doc_b = sb.doc_id AND sa.seed = sb.seed
+                        GROUP BY 1, 2) g
+                  WHERE n_equal >= 4),
+         np AS (SELECT count(*) AS n_pred FROM pred),
+         nt AS (SELECT count(*) AS n_truth FROM truth),
+         ntp AS (SELECT count(*) AS n_tp FROM pred
+                 WHERE EXISTS (SELECT 1 FROM truth t
+                               WHERE t.doc_a = pred.doc_a AND t.doc_b = pred.doc_b))
+         SELECT CAST(n_tp AS BIGINT) AS n_tp, CAST(n_pred AS BIGINT) AS n_pred,
+                CAST(n_truth AS BIGINT) AS n_truth,
+                round(CAST(n_tp AS DOUBLE)/CAST(n_pred AS DOUBLE), 6) AS prec,
+                round(CAST(n_tp AS DOUBLE)/CAST(n_truth AS DOUBLE), 6) AS rec
+         FROM np, nt, ntp"""),
+    Query("d_cascade", (s, dir) => {
       // the PRODUCTION dedup recipe as one declared query: tiers run
       // cheapest-first, each on the previous tier's survivors — exact
       // hash groups (md5, keep min id) first, then MinHash-LSH fuzzy
@@ -1255,8 +2169,49 @@ object TextOps {
           when(col("k").isNull, "removed_exact")
             .when(col("l").isNotNull, "removed_fuzzy")
             .otherwise("kept").as("status"))
-    }),
-    "d_threshold_sweep" -> ((s, dir) => {
+    }, oracle =
+      // tier 1 = the d_exact keep rule; tier 2 = the d_dedup_eval minhash
+      // chain rebuilt over tier-1 survivors only; the disposition CASE
+      // composes both
+      """WITH corpus AS MATERIALIZED (
+           SELECT doc_id, text FROM documents
+           UNION ALL
+           SELECT doc_id + 1000000 AS doc_id, text FROM documents
+           WHERE doc_id % 50 = 0),
+         keep AS MATERIALIZED (
+           SELECT min(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
+         s1 AS (SELECT d.doc_id, d.text FROM corpus d
+                JOIN keep k ON d.doc_id = k.doc_id),
+         sh AS (
+           SELECT doc_id, unnest(list_distinct(list_transform(
+                    generate_series(1, len(toks)-2),
+                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS sh
+           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM s1)
+           WHERE len(toks) >= 3),
+         sigs AS (SELECT doc_id, seed, min(md5(sh || ':' || CAST(seed AS VARCHAR))) AS sig
+                  FROM sh, (SELECT unnest(generate_series(0, 14)) AS seed) s GROUP BY 1, 2),
+         bands AS (SELECT doc_id, seed // 3 AS band,
+                          md5(string_agg(sig, ',' ORDER BY seed)) AS bkey
+                   FROM sigs GROUP BY 1, 2),
+         candp AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                   FROM bands a JOIN bands b
+                     ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+         losers AS MATERIALIZED (
+           SELECT DISTINCT doc_b FROM (
+             SELECT doc_a, doc_b,
+                    sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS n_equal
+             FROM candp JOIN sigs sa ON candp.doc_a = sa.doc_id
+                        JOIN sigs sb ON candp.doc_b = sb.doc_id AND sa.seed = sb.seed
+             GROUP BY 1, 2) g
+           WHERE n_equal >= 4)
+         SELECT d.doc_id,
+                CASE WHEN k.doc_id IS NULL THEN 'removed_exact'
+                     WHEN l.doc_b IS NOT NULL THEN 'removed_fuzzy'
+                     ELSE 'kept' END AS status
+         FROM corpus d
+         LEFT JOIN keep k ON d.doc_id = k.doc_id
+         LEFT JOIN losers l ON d.doc_id = l.doc_b"""),
+    Query("d_threshold_sweep", (s, dir) => {
       // dedup THRESHOLD TUNING as one declared query: the d_dedup_eval
       // acceptance gate evaluated at three LSH operating points
       // (n_equal ≥ 3/4/5 ≈ est. Jaccard 0.2/0.27/0.33) in a single plan —
@@ -1286,12 +2241,83 @@ object TextOps {
             .as("prec"),
           round(col("n_tp").cast("double") / col("n_truth").cast("double"), 6)
             .as("rec"))
-    }),
-    "d_simhash" -> ((s, dir) =>
-      TextDedup.simhash(docs(s, dir), "doc_id", "text")),
-    "d_simhash_pairs" -> ((s, dir) =>
-      TextDedup.simhashPairs(docs(s, dir), "doc_id", "text", 2)),
-    "d_incremental" -> ((s, dir) => {
+    }, oracle =
+      // the d_dedup_eval CTE chain with the threshold UNFILTERED pair
+      // table, swept by a 3-row cross join — groups with zero surviving
+      // pairs vanish identically in both engines
+      s"""WITH $shingleSql,
+         dfreq AS (SELECT sh, count(*) AS df_cnt FROM sh GROUP BY 1),
+         rare AS (SELECT s.doc_id, s.sh FROM sh s JOIN dfreq USING (sh)
+                  WHERE df_cnt <= 1000),
+         candt AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                   FROM rare a JOIN rare b ON a.sh = b.sh AND a.doc_id < b.doc_id),
+         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+         pt AS (SELECT doc_a, doc_b, count(*) AS inter_cnt
+                FROM candt
+                JOIN sh a ON a.doc_id = candt.doc_a
+                JOIN sh b ON b.doc_id = candt.doc_b AND b.sh = a.sh
+                GROUP BY 1, 2),
+         truth AS MATERIALIZED (
+           SELECT doc_a, doc_b
+           FROM pt JOIN sz sa ON pt.doc_a = sa.doc_id
+                   JOIN sz sb ON pt.doc_b = sb.doc_id
+           WHERE inter_cnt * 10 >= (sa.n + sb.n - inter_cnt) * 3),
+         sigs AS (SELECT doc_id, seed, min(md5(sh || ':' || CAST(seed AS VARCHAR))) AS sig
+                  FROM sh, (SELECT unnest(generate_series(0, 14)) AS seed) s GROUP BY 1, 2),
+         bands AS (SELECT doc_id, seed // 3 AS band,
+                          md5(string_agg(sig, ',' ORDER BY seed)) AS bkey
+                   FROM sigs GROUP BY 1, 2),
+         candp AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                   FROM bands a JOIN bands b
+                     ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+         predn AS (SELECT doc_a, doc_b,
+                          sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS n_equal
+                   FROM candp JOIN sigs sa ON candp.doc_a = sa.doc_id
+                              JOIN sigs sb ON candp.doc_b = sb.doc_id AND sa.seed = sb.seed
+                   GROUP BY 1, 2),
+         pm AS (SELECT p.n_equal,
+                       EXISTS (SELECT 1 FROM truth t
+                               WHERE t.doc_a = p.doc_a AND t.doc_b = p.doc_b)
+                         AS matched
+                FROM predn p),
+         ks AS (SELECT unnest([3, 4, 5]) AS k),
+         a AS (SELECT k, count(*) AS n_pred,
+                      sum(CASE WHEN matched THEN 1 ELSE 0 END) AS n_tp
+               FROM pm CROSS JOIN ks WHERE pm.n_equal >= ks.k GROUP BY 1),
+         nt AS (SELECT count(*) AS n_truth FROM truth)
+         SELECT CAST(k AS INTEGER) AS k, CAST(n_tp AS BIGINT) AS n_tp,
+                CAST(n_pred AS BIGINT) AS n_pred,
+                CAST(n_truth AS BIGINT) AS n_truth,
+                round(CAST(n_tp AS DOUBLE)/CAST(n_pred AS DOUBLE), 6) AS prec,
+                round(CAST(n_tp AS DOUBLE)/CAST(n_truth AS DOUBLE), 6) AS rec
+         FROM a, nt"""),
+    Query("d_simhash", (s, dir) =>
+      TextDedup.simhash(docs(s, dir), "doc_id", "text"), oracle =
+      """WITH tok AS (SELECT doc_id, tok, count(*) AS cnt
+                      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
+                      GROUP BY 1, 2),
+         bits AS (SELECT doc_id, j,
+                         sum(CASE WHEN substr(md5(tok), j + 1, 1) IN ('8','9','a','b','c','d','e','f')
+                                  THEN cnt ELSE -cnt END) AS s
+                  FROM tok, (SELECT unnest(generate_series(0, 31)) AS j) js GROUP BY 1, 2)
+         SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
+         FROM bits GROUP BY 1"""),
+    Query("d_simhash_pairs", (s, dir) =>
+      TextDedup.simhashPairs(docs(s, dir), "doc_id", "text", 2), oracle =
+      """WITH tok AS (SELECT doc_id, tok, count(*) AS cnt
+                      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
+                      GROUP BY 1, 2),
+         bits AS (SELECT doc_id, j,
+                         sum(CASE WHEN substr(md5(tok), j + 1, 1) IN ('8','9','a','b','c','d','e','f')
+                                  THEN cnt ELSE -cnt END) AS s
+                  FROM tok, (SELECT unnest(generate_series(0, 31)) AS j) js GROUP BY 1, 2),
+         sh AS (SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
+                FROM bits GROUP BY 1)
+         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
+         FROM sh a JOIN sh b ON (a.simhash >> 24) = (b.simhash >> 24) AND a.doc_id < b.doc_id
+         WHERE bit_count(xor(a.simhash, b.simhash)) <= 2"""),
+    Query("d_incremental", (s, dir) => {
       // incremental ingestion dedup: the 'src18' slice plays the newly
       // arriving batch, everything else the already-ingested corpus whose
       // band table is the persistent index. 9/15 matching positions
@@ -1300,8 +2326,30 @@ object TextOps {
       TextDedup.incrementalLshMatches(
         d.filter(col("source") =!= "src18"), d.filter(col("source") === "src18"),
         "doc_id", "text", 3, 15, 3, minEqual = 9)
-    }),
-    "t_fuzzy_curate" -> ((s, dir) => {
+    }, oracle =
+      s"""WITH $shingleSql,
+         sigs AS (SELECT doc_id, seed, min(md5(sh || ':' || CAST(seed AS VARCHAR))) AS sig
+                  FROM sh, (SELECT unnest(generate_series(0, 14)) AS seed) s GROUP BY 1, 2),
+         bands AS (SELECT doc_id, seed // 3 AS band,
+                          md5(string_agg(sig, ',' ORDER BY seed)) AS bkey
+                   FROM sigs GROUP BY 1, 2),
+         batchb AS (SELECT b.* FROM bands b JOIN documents d USING(doc_id)
+                    WHERE d.source = 'src18'),
+         corpb  AS (SELECT b.* FROM bands b JOIN documents d USING(doc_id)
+                    WHERE d.source <> 'src18'),
+         cand AS (SELECT DISTINCT a.doc_id AS bid, c.doc_id AS cid
+                  FROM batchb a JOIN corpb c ON a.band = c.band AND a.bkey = c.bkey),
+         eq AS (SELECT bid, cid,
+                       CAST(sum(CASE WHEN sa.sig = sc.sig THEN 1 ELSE 0 END) AS BIGINT) AS n_equal
+                FROM cand JOIN sigs sa ON cand.bid = sa.doc_id
+                          JOIN sigs sc ON cand.cid = sc.doc_id AND sa.seed = sc.seed
+                GROUP BY 1, 2
+                HAVING CAST(sum(CASE WHEN sa.sig = sc.sig THEN 1 ELSE 0 END) AS BIGINT) >= 9)
+         SELECT bid AS doc_id,
+                CAST(-(max(struct_pack(n := n_equal, nc := -cid)).nc) AS BIGINT) AS match_id,
+                max(struct_pack(n := n_equal, nc := -cid)).n AS n_equal
+         FROM eq GROUP BY 1"""),
+    Query("t_fuzzy_curate", (s, dir) => {
       // FUZZY curation flagship — the near-dup generalization of t_curate's
       // exact chain, composing three operator families in one declarative
       // plan: SimHash candidate pairs → connected components → keep each
@@ -1320,7 +2368,20 @@ object TextOps {
         .withColumn("n_tokens", size(TextFunctions.tokens(col("text"))))
         .filter(col("n_tokens").between(20, 400))
         .select("doc_id", "lang", "n_tokens")
-    }),
+    }, oracle =
+      // the same transitive-closure labels, then: survivors = unclustered
+      // docs + per-cluster minimum, quality-windowed
+      s"""WITH $clustersCteSql,
+         survivors AS (
+           SELECT doc_id FROM documents
+           WHERE doc_id NOT IN (SELECT doc_id FROM labels)
+           UNION ALL
+           SELECT doc_id FROM labels WHERE doc_id = cluster_id),
+         t AS (SELECT d.doc_id, d.lang,
+                      CAST(len(string_split(d.text, ' ')) AS INTEGER) AS n_tokens
+               FROM documents d JOIN survivors USING (doc_id))
+         SELECT doc_id, lang, n_tokens FROM t
+         WHERE n_tokens BETWEEN 20 AND 400"""),
     // pairs -> groups: connected components over the SimHash candidate
     // graph, then each doc labeled with its cluster's min doc_id (the
     // canonical survivor) and the cluster size. Near-dup relations are
@@ -1329,7 +2390,7 @@ object TextOps {
     // twice — once per CC algorithm, both against the SAME oracle: the
     // O(diameter) propagation and the O(log^2 n) star-rewriting must be
     // indistinguishable in output.
-    "d_dbscan" -> ((s, dir) => {
+    Query("d_dbscan", (s, dir) => {
       // DBSCAN (Ester et al. KDD'96) over the SimHash Hamming metric —
       // density-based near-dup clustering with an explicit NOISE class,
       // which min-label components cannot express (components merge every
@@ -1392,12 +2453,70 @@ object TextOps {
         .select(col("doc_id"),
           coalesce(col("role"), lit("noise")).as("role"),
           coalesce(col("cluster_id"), lit(-1L)).as("cluster_id"))
-    }),
-    "d_dedup_clusters" -> ((s, dir) =>
-      clustersVia(s, dir, Components.connectedComponents(_, _, _))),
-    "d_clusters_stars" -> ((s, dir) =>
-      clustersVia(s, dir, Components.connectedComponentsStars(_, _, _))),
-    "t_classifier_score" -> ((s, dir) => {
+    }, oracle =
+      // same SimHash candidate graph as d_simhash_pairs, closed transitively:
+      // the recursive CTE enumerates reachable ids per node (fine at oracle
+      // scale; the engine side never materializes reachability — it
+      // min-label-propagates in O(diameter) joins). d_clusters_stars runs
+      // the large/small-star algorithm against the identical oracle.
+      // identical simhash block, the 3-band pigeonhole candidate join,
+      // integer core test, min-reach components over core-core edges
+      // (the clustersCteSql recursion), min-cluster border attach
+      """WITH RECURSIVE tok AS (SELECT doc_id, tok, count(*) AS cnt
+                      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
+                      GROUP BY 1, 2),
+         bits AS (SELECT doc_id, j,
+                         sum(CASE WHEN substr(md5(tok), j + 1, 1) IN ('8','9','a','b','c','d','e','f')
+                                  THEN cnt ELSE -cnt END) AS s
+                  FROM tok, (SELECT unnest(generate_series(0, 31)) AS j) js GROUP BY 1, 2),
+         sh AS MATERIALIZED (
+           SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
+           FROM bits GROUP BY 1),
+         bnd AS (SELECT doc_id, simhash, 0 AS bi, simhash >> 21 AS bk FROM sh
+                 UNION ALL
+                 SELECT doc_id, simhash, 1, (simhash >> 10) & 2047 FROM sh
+                 UNION ALL
+                 SELECT doc_id, simhash, 2, simhash & 1023 FROM sh),
+         prs AS MATERIALIZED (
+           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+           FROM bnd a JOIN bnd b
+             ON a.bi = b.bi AND a.bk = b.bk AND a.doc_id < b.doc_id
+           WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
+         nbrs AS (SELECT doc_a AS doc_id, doc_b AS nb FROM prs
+                  UNION ALL SELECT doc_b, doc_a FROM prs),
+         core AS MATERIALIZED (
+           SELECT doc_id FROM (SELECT doc_id, count(*) AS deg FROM nbrs GROUP BY 1)
+           WHERE deg >= 2),
+         ce AS (SELECT doc_a, doc_b FROM prs
+                WHERE doc_a IN (SELECT doc_id FROM core)
+                  AND doc_b IN (SELECT doc_id FROM core)),
+         eds AS (SELECT doc_a AS src, doc_b AS dst FROM ce
+                 UNION SELECT doc_b, doc_a FROM ce),
+         reach AS (SELECT src AS node, src AS comp FROM eds
+                   UNION
+                   SELECT r.node, e.dst AS comp FROM reach r JOIN eds e ON e.src = r.comp),
+         labels AS (SELECT node AS doc_id, min(comp) AS cluster_id FROM reach GROUP BY 1),
+         corelab AS MATERIALIZED (
+           SELECT c.doc_id, COALESCE(l.cluster_id, c.doc_id) AS cluster_id
+           FROM core c LEFT JOIN labels l USING (doc_id)),
+         borderlab AS (
+           SELECT n.doc_id, min(cl.cluster_id) AS cluster_id
+           FROM nbrs n JOIN corelab cl ON n.nb = cl.doc_id
+           WHERE n.doc_id NOT IN (SELECT doc_id FROM core)
+           GROUP BY 1)
+         SELECT d.doc_id,
+                CASE WHEN c.doc_id IS NOT NULL THEN 'core'
+                     WHEN b.doc_id IS NOT NULL THEN 'border'
+                     ELSE 'noise' END AS role,
+                COALESCE(c.cluster_id, b.cluster_id, -1) AS cluster_id
+         FROM documents d
+         LEFT JOIN corelab c USING (doc_id)
+         LEFT JOIN borderlab b USING (doc_id)"""),
+    Query("d_dedup_clusters", (s, dir) =>
+      clustersVia(s, dir, Components.connectedComponents(_, _, _)), oracle = clustersOracleSql),
+    Query("d_clusters_stars", (s, dir) =>
+      clustersVia(s, dir, Components.connectedComponentsStars(_, _, _)), oracle = clustersOracleSql),
+    Query("t_classifier_score", (s, dir) => {
       // hashed-linear quality classifier — the fastText-style scorer
       // behind the published DCLM / FineWeb-Edu quality filters (public
       // recipe SHAPE; the weights here are a deterministic md5-derived
@@ -1420,8 +2539,25 @@ object TextOps {
           round(col("w_sum").cast("double") / col("n_tokens"), 6)
             .as("score_per_token"),
           (col("w_sum") > 0).cast(IntegerType).as("keep"))
-    }),
-    "t_classifier_train" -> ((s, dir) => {
+    }, oracle =
+      // identical hash chain per token: bucket = first-6-hex md5 % 64,
+      // weight = first-4-hex md5('w'||bucket) % 2001 − 1000; integer list
+      // sum, one IEEE division, integer sign test
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
+                    FROM documents),
+         c AS (SELECT doc_id,
+                 CAST(len(toks) AS INTEGER) AS n_tokens,
+                 CAST(list_aggregate(list_transform(toks,
+                   t -> ('0x' || substr(md5('w' ||
+                          CAST(('0x' || substr(md5(t), 1, 6))::BIGINT % 64
+                               AS VARCHAR)), 1, 4))::BIGINT % 2001 - 1000),
+                   'sum') AS BIGINT) AS w_sum
+               FROM t)
+         SELECT doc_id, n_tokens, w_sum,
+                round(CAST(w_sum AS DOUBLE) / n_tokens, 6) AS score_per_token,
+                CAST(CASE WHEN w_sum > 0 THEN 1 ELSE 0 END AS INTEGER) AS keep
+         FROM c"""),
+    Query("t_classifier_train", (s, dir) => {
       // TRAINED hashed-linear classifier — closes the last stand-in in
       // the curation stack (t_classifier_score's md5-derived weights are
       // a deterministic placeholder; these weights are LEARNED): 3
@@ -1512,8 +2648,56 @@ object TextOps {
         .withColumn("mse_r3", lit(mseHist(2)))
         .withColumn("n_correct", lit(accRow.getLong(0)))
         .withColumn("n_docs", lit(accRow.getLong(1)))
-    }),
-    "t_bpe_train" -> ((s, dir) => {
+    }, oracle =
+      // the identical 3 unrolled fixed-point GD rounds: 64-bucket hashed
+      // counts, the langid-vote label, pred/err/grad per round, the
+      // truncate-toward-zero update w - g // (n*1024), DECIMAL(38,0) sse
+      // -> correctly-rounded double -> the same two IEEE divisions
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
+                     FROM documents),
+         feats AS MATERIALIZED (
+           SELECT doc_id,
+                  ('0x' || substr(md5(tok), 1, 6))::BIGINT % 64 AS bucket,
+                  count(*) AS x
+           FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
+           GROUP BY 1, 2),
+         y AS MATERIALIZED (
+           SELECT doc_id,
+                  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
+           FROM documents),
+         nn AS (SELECT count(*) AS n FROM documents),
+         w0 AS MATERIALIZED (
+           SELECT DISTINCT bucket, CAST(0 AS BIGINT) AS w FROM feats),
+         ${(1 to 3).map { r =>
+           s"""p$r AS (SELECT f.doc_id, CAST(sum(f.x * w.w) AS BIGINT) AS p
+                 FROM feats f JOIN w${r - 1} w USING (bucket) GROUP BY 1),
+         e$r AS MATERIALIZED (
+           SELECT y.doc_id, coalesce(p.p, 0) - y.y * 1048576 AS e
+           FROM y LEFT JOIN p$r p USING (doc_id)),
+         g$r AS (SELECT f.bucket, CAST(sum(f.x * e.e) AS BIGINT) AS g
+                 FROM feats f JOIN e$r e USING (doc_id) GROUP BY 1),
+         w$r AS MATERIALIZED (
+           SELECT w.bucket,
+                  CAST(w.w - coalesce(g.g, 0) // ((SELECT n FROM nn) * 256) AS BIGINT) AS w
+           FROM w${r - 1} w LEFT JOIN g$r g USING (bucket)),
+         m$r AS (SELECT (CAST(sum(CAST(e AS DECIMAL(38,0))
+                               * CAST(e AS DECIMAL(38,0))) AS DOUBLE)
+                         / (SELECT n FROM nn)) / 1099511627776.0 AS mse
+                 FROM e$r)"""
+         }.mkString(",\n         ")},
+         pf AS (SELECT f.doc_id, CAST(sum(f.x * w.w) AS BIGINT) AS p
+                FROM feats f JOIN w3 w USING (bucket) GROUP BY 1),
+         acc AS (SELECT CAST(count(*) FILTER
+                          ((coalesce(p.p, 0) > 524288) = (y.y = 1))
+                          AS BIGINT) AS n_correct,
+                        count(*) AS n_docs
+                 FROM y LEFT JOIN pf p USING (doc_id))
+         SELECT w1.bucket, w1.w AS w_r1, w2.w AS w_r2, w3.w AS w_r3,
+                m1.mse AS mse_r1, m2.mse AS mse_r2, m3.mse AS mse_r3,
+                acc.n_correct, acc.n_docs
+         FROM w1 JOIN w2 USING (bucket) JOIN w3 USING (bucket),
+              m1, m2, m3, acc"""),
+    Query("t_bpe_train", (s, dir) => {
       // BPE tokenizer TRAINING as distributed dataflow (Sennrich et al.,
       // ACL 2016 — the published merge-loop, here over whitespace symbols;
       // a real trainer iterates the same plan over its evolving subword
@@ -1559,8 +2743,58 @@ object TextOps {
         .select(col("doc_id"), col("n_syms"), col("doc_fp"),
           lit(merges(0)).as("m1"), lit(merges(1)).as("m2"),
           lit(merges(2)).as("m3"))
-    }),
-    "t_bpe_encode" -> ((s, dir) => {
+    }, oracle =
+      // the identical 3 unrolled merge rounds: lead-window pair counts,
+      // the (count DESC, pair ASC) top-1 pick, island-parity greedy
+      // application, absorbed-symbol drop + reindex; final per-doc
+      // ordered string_agg md5 + the three merge literals
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
+                     FROM documents),
+         x0 AS (SELECT doc_id, toks,
+                       unnest(generate_series(1, len(toks))) AS i
+                FROM t),
+         s0 AS MATERIALIZED (
+           SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, toks[i] AS sym
+           FROM x0),
+         ${(1 to 3).map { r =>
+           s"""w$r AS MATERIALIZED (
+           SELECT doc_id, pos, sym,
+                  lead(sym) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
+           FROM s${r - 1}),
+         mr$r AS MATERIALIZED (
+           SELECT sym AS a, nxt AS b FROM w$r WHERE nxt IS NOT NULL
+           GROUP BY sym, nxt
+           ORDER BY count(*) DESC, sym ASC, nxt ASC LIMIT 1),
+         mt$r AS (SELECT doc_id, pos,
+                         row_number() OVER (PARTITION BY doc_id
+                           ORDER BY pos) AS rn
+                  FROM w$r, mr$r WHERE sym = mr$r.a AND nxt = mr$r.b),
+         ap$r AS MATERIALIZED (
+           SELECT doc_id, pos
+           FROM (SELECT doc_id, pos, pos - rn AS island FROM mt$r)
+           QUALIFY (pos - min(pos) OVER (PARTITION BY doc_id, island))
+                   % 2 = 0),
+         s$r AS MATERIALIZED (
+           SELECT s.doc_id,
+                  CAST(row_number() OVER (PARTITION BY s.doc_id
+                    ORDER BY s.pos) - 1 AS BIGINT) AS pos,
+                  CASE WHEN ia.pos IS NOT NULL
+                       THEN s.sym || '+' || mr$r.b ELSE s.sym END AS sym
+           FROM s${r - 1} s
+           LEFT JOIN ap$r ia
+             ON s.doc_id = ia.doc_id AND s.pos = ia.pos
+           LEFT JOIN (SELECT doc_id, pos + 1 AS pos FROM ap$r) ib
+             ON s.doc_id = ib.doc_id AND s.pos = ib.pos
+           CROSS JOIN mr$r
+           WHERE ib.pos IS NULL)"""
+         }.mkString(",\n         ")}
+         SELECT s.doc_id, count(*) AS n_syms,
+                md5(string_agg(s.sym, ' ' ORDER BY s.pos)) AS doc_fp,
+                (SELECT a || '+' || b FROM mr1) AS m1,
+                (SELECT a || '+' || b FROM mr2) AS m2,
+                (SELECT a || '+' || b FROM mr3) AS m3
+         FROM s3 s GROUP BY s.doc_id"""),
+    Query("t_bpe_encode", (s, dir) => {
       // BPE ENCODING against a TRAINED merge table — the apply half of
       // Sennrich et al. ACL'16, and the missing link between
       // t_bpe_train's tokenizer training and t_pack/t_window_chunk's
@@ -1619,1390 +2853,7 @@ object TextOps {
             x => x.getField("tok_id").cast("string")))).as("ids_fp"))
         .select(col("doc_id"), col("n_tokens"), col("n_unk"), col("ids_fp"),
           lit(mergeTable).as("merge_table"))
-    }),
-    "t_ccnet_bucket" -> ((s, dir) => {
-      // CCNet-style perplexity bucketing (Wenzek et al., LREC 2020 —
-      // public recipe): score every doc under the corpus LM, then split
-      // EACH language's docs into head / middle / tail terciles by
-      // fluency — the standard "keep head+middle, drop tail" curation
-      // gate. Fluency is the t_lm_quality chain (add-one bigram mean —
-      // decimal-accumulated, libm-free); the language is the marker-vote
-      // prediction (a model output, as in CCNet, not the gold label). The
-      // tercile is ntile(3) over (fluency DESC, doc_id) per language — a
-      // per-language sort, which IS CCNet's shape; at 100 TB the same
-      // bucket semantics comes from sampled quantile cuts
-      // (approx_percentile) instead of a full sort, with this exact
-      // formulation as the gate. Docs with < 2 tokens have no bigrams and
-      // are out of scope (inner join), as in t_lm_quality.
-      import org.apache.spark.sql.expressions.Window
-      val d = docs(s, dir)
-      val grams = d.select(col("doc_id"), explode(TextFunctions.ngrams(
-        TextFunctions.tokens(col("text")), 2)).as("pair"))
-      val bi = grams.groupBy("pair").agg(count(lit(1)).as("c12"))
-        .withColumn("w1", substring_index(col("pair"), " ", 1))
-      val ctx = bi.groupBy("w1").agg(sum("c12").as("c1"))
-      val vocab = d.select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-        .agg(countDistinct(col("tok")).as("v"))
-      val lm = bi.join(ctx, "w1").crossJoin(broadcast(vocab))
-        .select(col("pair"),
-          ((col("c12") + lit(1.0)) / (col("c1") + col("v"))).as("p"))
-      val fluency = grams.join(lm, "pair")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"),
-          (sum(col("p").cast(DecimalType(28, 16))).cast("double") /
-            count(lit(1))).as("mp_raw"))
-      val voted = d.select(col("doc_id"), predLangOf(col("text")).as("pred_lang"))
-      fluency.join(voted, "doc_id")
-        .withColumn("tercile", ntile(3).over(Window.partitionBy("pred_lang")
-          .orderBy(col("mp_raw").desc, col("doc_id").asc)))
-        .select(col("doc_id"), col("pred_lang"), col("n_bigrams"),
-          round(col("mp_raw"), 9).as("mean_p"),
-          when(col("tercile") === 1, "head")
-            .when(col("tercile") === 2, "middle")
-            .otherwise("tail").as("ppl_bucket"))
-    }),
-    "t_hash_embed" -> ((s, dir) => {
-      // feature-hashed document vectors (the hashing trick — Weinberger
-      // et al., ICML'09: bucket = h(token) mod D, value accumulates a
-      // ±1 sign from an INDEPENDENT hash, so collisions cancel in
-      // expectation and the "embedding" needs no trained encoder). D=64
-      // via the shared md5-bucket idiom (t_classifier_score's feature
-      // map); sign = parity of the first hex digit of md5('s'||token).
-      // This is the bridge between the text corpus and the vector
-      // surface: cheap, deterministic per-doc vectors for clustering and
-      // near-dup when no model is available. The WHOLE sparse vector
-      // gates through one canonical fingerprint (sorted "b:v" pairs, the
-      // t_render_sft lineage idiom — one flipped sign or shifted bucket
-      // fails the hash) plus its L0/L1/L2 moments and argmax bucket
-      // (ties → smallest bucket). Plan: one scan-fused explode, one
-      // (doc,bucket) hash aggregate, one doc-keyed aggregate — both
-      // map-side combinable, nothing corpus-global; at 100 TB the op is
-      // embarrassingly parallel and the output is 6 fixed-width columns
-      // per doc, never the 64-wide dense frame.
-      val bv = docs(s, dir)
-        .select(col("doc_id"),
-          explode(TextFunctions.tokens(col("text"))).as("tok"))
-        .select(col("doc_id"),
-          (conv(substring(md5(col("tok")), 1, 6), 16, 10)
-            .cast(LongType) % 64).as("b"),
-          when(conv(substring(md5(concat(lit("s"), col("tok"))), 1, 1),
-            16, 10).cast(LongType) % 2 === 0, lit(1L))
-            .otherwise(lit(-1L)).as("sgn"))
-        .groupBy("doc_id", "b").agg(sum("sgn").as("v"))
-        .filter(col("v") =!= 0)
-      bv.groupBy("doc_id").agg(
-          count(lit(1)).cast("int").as("nnz"),
-          sum(abs(col("v"))).as("l1"),
-          sum(col("v") * col("v")).as("l2sq"),
-          max(struct(col("v"), (-col("b")).as("nb"))).as("mx"),
-          md5(concat_ws(",", transform(
-            array_sort(collect_list(struct(col("b"), col("v")))),
-            x => concat(x.getField("b").cast("string"), lit(":"),
-              x.getField("v").cast("string"))))).as("vec_md5"))
-        .select(col("doc_id"), col("nnz"), col("l1"), col("l2sq"),
-          (-col("mx.nb")).as("top_bucket"), col("mx.v").as("top_v"),
-          col("vec_md5"))
-    })
-  )
-
-  private def clustersVia(s: SparkSession, dir: String,
-      cc: (DataFrame, String, String) => DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val prs = TextDedup.simhashPairs(docs(s, dir), "doc_id", "text", 2)
-      .select("doc_a", "doc_b")
-    cc(prs, "doc_a", "doc_b")
-      .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
-      .withColumn("cluster_size",
-        count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
-  }
-
-  private val shingleSql =
-    """sh AS (
-         SELECT doc_id, unnest(list_distinct(list_transform(
-                  generate_series(1, len(toks)-2),
-                  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS sh
-         FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-         WHERE len(toks) >= 3)"""
-
-  val oracles: Map[String, String] = Map(
-    "t_tokens" ->
-      """SELECT doc_id, CAST(length(text) AS INTEGER) AS char_len,
-                CAST(len(string_split(text, ' ')) AS INTEGER) AS n_ws_tokens,
-                CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS INTEGER) AS n_bpe_tokens
-         FROM documents""",
-    "t_quality" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-         c AS (SELECT doc_id, text,
-                      CAST(len(toks) AS INTEGER) AS n_tokens,
-                      CAST(len(list_distinct(toks)) AS INTEGER) AS n_uniq,
-                      CAST(len(list_filter(toks, x -> x IN ('the', 'a'))) AS INTEGER) AS n_stop
-               FROM t)
-         SELECT doc_id, n_tokens, n_uniq, n_stop,
-                round(CAST(length(replace(text, ' ', '')) AS DOUBLE)/n_tokens, 6) AS avg_token_len,
-                round(CAST(n_stop AS DOUBLE)/n_tokens, 6) AS stop_ratio,
-                round((CAST(n_uniq AS DOUBLE)/n_tokens) *
-                      (CASE WHEN n_tokens BETWEEN 20 AND 400 THEN 1.0 ELSE 0.5 END), 6) AS quality_score
-         FROM c""",
-    "t_langid" ->
-      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-         c AS (SELECT doc_id, lang,
-                 CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','is'))) AS INTEGER) AS n_en,
-                 CAST(len(list_filter(toks, x -> x IN ('el','la','los','es','y'))) AS INTEGER) AS n_es,
-                 CAST(len(list_filter(toks, x -> x IN ('le','les','des','et','est'))) AS INTEGER) AS n_fr,
-                 CAST(len(list_filter(toks, x -> x IN ('der','die','das','und','ist'))) AS INTEGER) AS n_de,
-                 CAST(len(list_filter(toks, x -> x IN ('de0','shi4','le0','zai4','wo3'))) AS INTEGER) AS n_zh
-               FROM t)
-         SELECT doc_id, lang, n_en, n_es, n_fr, n_de, n_zh,
-                CASE WHEN n_zh > greatest(n_en, n_es, n_fr, n_de) THEN 'zh'
-                     WHEN n_de > greatest(n_en, n_es, n_fr) THEN 'de'
-                     WHEN n_fr > greatest(n_en, n_es) THEN 'fr'
-                     WHEN n_es > n_en THEN 'es'
-                     ELSE 'en' END AS pred_lang,
-                (CASE WHEN n_zh > greatest(n_en, n_es, n_fr, n_de) THEN 'zh'
-                      WHEN n_de > greatest(n_en, n_es, n_fr) THEN 'de'
-                      WHEN n_fr > greatest(n_en, n_es) THEN 'fr'
-                      WHEN n_es > n_en THEN 'es'
-                      ELSE 'en' END) = lang AS is_match
-         FROM c""",
-    "t_freq_quality" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-         corpus AS (SELECT tok, count(*) AS tok_freq FROM toks GROUP BY tok),
-         total AS (SELECT count(*) AS n FROM toks)
-         SELECT doc_id, count(*) AS n_tokens,
-                round(CAST(sum(CAST(CAST(tok_freq AS DOUBLE)/total.n AS DECIMAL(28,18))) AS DOUBLE)
-                      / count(*), 9) AS mean_freq_ratio
-         FROM toks JOIN corpus USING (tok), total
-         GROUP BY doc_id""",
-    "t_winnow" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-         g AS (SELECT doc_id,
-                      list_transform(generate_series(1, len(toks) - 2),
-                        i -> md5(toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS hs
-               FROM t WHERE len(toks) >= 6)
-         SELECT doc_id,
-                unnest(list_distinct(list_transform(generate_series(1, len(hs) - 3),
-                  i -> list_aggregate(hs[i:i+3], 'min')))) AS fp
-         FROM g""",
-    "t_fingerprint" ->
-      """SELECT doc_id, md5(trim(lower(text))) AS fp,
-                substr(md5(trim(lower(text))), 1, 8) AS fp_prefix
-         FROM documents""",
-    "t_curate" ->
-      // replays the curation chain: exact-dedup canonical survivors →
-      // marker-vote language prediction (same CASE chain as t_langid) →
-      // predicted-en + token-window filters
-      """WITH keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-         t AS (SELECT d.doc_id, d.lang, string_split(d.text, ' ') AS toks
-               FROM documents d JOIN keep USING (doc_id)),
-         c AS (SELECT doc_id, lang,
-                 CAST(len(toks) AS INTEGER) AS n_tokens,
-                 len(list_filter(toks, x -> x IN ('the','a','of','and','is'))) AS n_en,
-                 len(list_filter(toks, x -> x IN ('el','la','los','es','y'))) AS n_es,
-                 len(list_filter(toks, x -> x IN ('le','les','des','et','est'))) AS n_fr,
-                 len(list_filter(toks, x -> x IN ('der','die','das','und','ist'))) AS n_de,
-                 len(list_filter(toks, x -> x IN ('de0','shi4','le0','zai4','wo3'))) AS n_zh
-               FROM t)
-         SELECT doc_id, lang, n_tokens FROM c
-         WHERE (CASE WHEN n_zh > greatest(n_en, n_es, n_fr, n_de) THEN 'zh'
-                     WHEN n_de > greatest(n_en, n_es, n_fr) THEN 'de'
-                     WHEN n_fr > greatest(n_en, n_es) THEN 'fr'
-                     WHEN n_es > n_en THEN 'es'
-                     ELSE 'en' END) = 'en'
-           AND n_tokens BETWEEN 20 AND 80""",
-    "t_source_quota" ->
-      """WITH d AS (SELECT doc_id, source,
-                           CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens
-                    FROM documents),
-         r AS (SELECT source, doc_id, n_tokens,
-                      row_number() OVER (PARTITION BY source
-                        ORDER BY n_tokens DESC, doc_id ASC) AS rn
-               FROM d)
-         SELECT source, doc_id, n_tokens FROM r WHERE rn <= 5""",
-    "t_ngram_novelty" ->
-      // the shared shingle CTE split by the same md5 rule; NOT IN is safe
-      // (shingles are never NULL), per-doc ratio of exact integers
-      s"""WITH $shingleSql,
-         tr AS (SELECT DISTINCT sh FROM sh
-                WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c'),
-         te AS (SELECT doc_id, sh FROM sh
-                WHERE NOT substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c'),
-         nv AS (SELECT doc_id, count(*) AS n_novel FROM te
-                WHERE sh NOT IN (SELECT sh FROM tr) GROUP BY 1),
-         g AS (SELECT doc_id, count(*) AS n_grams FROM te GROUP BY 1)
-         SELECT g.doc_id, CAST(n_grams AS BIGINT) AS n_grams,
-                CAST(coalesce(n_novel, 0) AS BIGINT) AS n_novel,
-                round(CAST(coalesce(n_novel, 0) AS DOUBLE)
-                      / CAST(n_grams AS DOUBLE), 6) AS novelty_rate
-         FROM g LEFT JOIN nv ON g.doc_id = nv.doc_id""",
-    "t_render_sft" ->
-      // byte-identical re-render: same markers, same 8-token instruction
-      // slice, same newlines; length + md5 gate the whole template
-      """SELECT doc_id, lang,
-                CAST(length('<|system|>lang=' || lang || chr(10) ||
-                  '<|user|>' ||
-                  array_to_string(list_slice(string_split(text, ' '), 1, 8), ' ') ||
-                  chr(10) || '<|assistant|>' || text || '<|end|>') AS INTEGER)
-                  AS record_chars,
-                md5('<|system|>lang=' || lang || chr(10) ||
-                  '<|user|>' ||
-                  array_to_string(list_slice(string_split(text, ' '), 1, 8), ' ') ||
-                  chr(10) || '<|assistant|>' || text || '<|end|>')
-                  AS record_md5
-         FROM documents""",
-    "t_window_chunk" ->
-      // identical window arithmetic: generate_series starts, inclusive
-      // 1-based list_slice (same tail truncation as Spark's slice), md5
-      // over the space-joined window
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-                    FROM documents),
-         g AS (SELECT doc_id, toks,
-                      unnest(generate_series(1, greatest(len(toks), 1), 48))
-                        AS start
-               FROM t)
-         SELECT doc_id,
-                CAST((start - 1) // 48 AS INTEGER) AS chunk_id,
-                CAST(start AS INTEGER) AS start,
-                CAST(len(list_slice(toks, start, start + 63)) AS INTEGER)
-                  AS chunk_tokens,
-                md5(array_to_string(list_slice(toks, start, start + 63), ' '))
-                  AS chunk_md5
-         FROM g""",
-    "t_diversity" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-                      FROM documents),
-         c AS (SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY 1, 2),
-         a AS (SELECT doc_id, CAST(sum(c * c) AS BIGINT) AS s2,
-                      CAST(sum(c) AS BIGINT) AS n
-               FROM c GROUP BY 1)
-         SELECT doc_id, n AS n_tokens,
-                round(CAST(1 AS DOUBLE)
-                      - CAST(s2 AS DOUBLE) / CAST(n * n AS DOUBLE), 6)
-                  AS diversity
-         FROM a""",
-    "d_canonical" ->
-      // the d_dedup_clusters replay + the longest-member argmax
-      s"""WITH $clustersCteSql,
-         j AS (SELECT l.cluster_id, d.doc_id, d.n_chars
-               FROM labels l JOIN documents d ON l.doc_id = d.doc_id)
-         SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
-                -((max(struct_pack(n_chars := n_chars, nd := -doc_id))).nd)
-                  AS canonical_doc,
-                (max(struct_pack(n_chars := n_chars, nd := -doc_id))).n_chars
-                  AS canonical_chars
-         FROM j GROUP BY 1""",
-    "t_mix_sqrt" ->
-      // identical √-weight chain: per-source token sum, sqrt (IEEE-exact
-      // at α = 0.5), DECIMAL(28,16)-cast terms into an order-independent
-      // windowed total, one double division, floored integer allocation
-      """WITH a AS (SELECT source, count(*) AS n_docs,
-                           CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-                             AS n_tokens
-                    FROM documents GROUP BY 1),
-         w AS (SELECT source, n_docs, n_tokens,
-                      CAST(sqrt(CAST(n_tokens AS DOUBLE)) AS DECIMAL(28,16))
-                        AS wdec
-               FROM a),
-         sh AS (SELECT source, n_docs, n_tokens,
-                       CAST(wdec AS DOUBLE)
-                         / CAST(sum(wdec) OVER () AS DOUBLE) AS share
-                FROM w)
-         SELECT source, n_docs, n_tokens, round(share, 6) AS share,
-                CAST(floor(share * 100000.0) AS BIGINT) AS target_docs
-         FROM sh""",
-    "t_gopher_rules" ->
-      // identical rule arithmetic: integer word/stopword counts, the
-      // single-division mean word length, BETWEEN on identical doubles
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks
-                    FROM documents),
-         c AS (SELECT doc_id,
-                 CAST(len(toks) AS INTEGER) AS n_words,
-                 CAST(length(replace(text, ' ', '')) AS DOUBLE) / len(toks)
-                   AS mwl,
-                 CAST(len(list_filter(toks,
-                   x -> x IN ('the', 'a', 'of', 'to', 'and'))) AS INTEGER)
-                   AS n_stop
-               FROM t)
-         SELECT doc_id, n_words, round(mwl, 6) AS mean_word_len, n_stop,
-                CAST(CASE WHEN n_words BETWEEN 50 AND 100000
-                     THEN 1 ELSE 0 END AS INTEGER) AS r_word_count,
-                CAST(CASE WHEN mwl BETWEEN 3.0 AND 10.0
-                     THEN 1 ELSE 0 END AS INTEGER) AS r_mean_len,
-                CAST(CASE WHEN n_stop >= 2
-                     THEN 1 ELSE 0 END AS INTEGER) AS r_stopwords,
-                CAST(CASE WHEN n_words BETWEEN 50 AND 100000
-                          AND mwl BETWEEN 3.0 AND 10.0
-                          AND n_stop >= 2
-                     THEN 1 ELSE 0 END AS INTEGER) AS keep
-         FROM c""",
-    "t_dsir" ->
-      // identical hashed-bucket model: md5-unigram → 256 buckets, add-one
-      // smoothed target/raw counts, the pure-integer per-doc sums, and the
-      // same two-division IEEE score chain
-      """WITH tok AS (SELECT doc_id, lang,
-                unnest(string_split(text, ' ')) AS tok FROM documents),
-         tf AS MATERIALIZED (SELECT doc_id, lang,
-                ('0x' || substr(md5(tok), 1, 8))::BIGINT % 256 AS f
-              FROM tok),
-         raw AS (SELECT f, count(*) AS cr FROM tf GROUP BY 1),
-         tgt AS (SELECT f, count(*) AS ct FROM tf WHERE lang = 'en' GROUP BY 1),
-         st AS MATERIALIZED (
-           SELECT r.f, COALESCE(t.ct, 0) AS ct, r.cr
-           FROM raw r LEFT JOIN tgt t USING (f)),
-         tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM st),
-         doc AS (SELECT d.doc_id,
-                        CAST(count(*) AS BIGINT) AS n_tok,
-                        CAST(sum(s.ct + 1) AS BIGINT) AS a_sum,
-                        CAST(sum(s.cr + 1) AS BIGINT) AS b_sum
-                 FROM tf d JOIN st s USING (f) GROUP BY 1),
-         sc AS (SELECT doc_id, n_tok, a_sum, b_sum,
-                       CAST(a_sum AS DOUBLE) / CAST(tt + 256 AS DOUBLE)
-                         - CAST(b_sum AS DOUBLE) / CAST(tr + 256 AS DOUBLE)
-                         AS score
-                FROM doc, tot)
-         SELECT doc_id, n_tok, a_sum, b_sum, round(score, 9) AS score,
-                CAST(CASE WHEN score > 0 THEN 1 ELSE 0 END AS INTEGER)
-                  AS selected
-         FROM sc""",
-    "t_weighted_sample" ->
-      """WITH t AS (SELECT doc_id,
-                CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens
-         FROM documents)
-         SELECT doc_id, n_tokens,
-                round(least(1.0, CAST(n_tokens AS DOUBLE) / 100.0), 6) AS weight
-         FROM t
-         WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT
-               / 281474976710656.0
-               < least(1.0, CAST(n_tokens AS DOUBLE) / 100.0)""",
-    "t_upsample" ->
-      """WITH t AS (SELECT doc_id,
-                CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens
-         FROM documents),
-         c AS (SELECT doc_id, n_tokens,
-                      CASE WHEN n_tokens >= 60 THEN 3
-                           WHEN n_tokens >= 30 THEN 2 ELSE 1 END AS n_copies
-               FROM t)
-         SELECT doc_id, n_tokens, CAST(n_copies AS INTEGER) AS n_copies,
-                CAST(unnest(generate_series(1, n_copies)) AS INTEGER) AS copy_n
-         FROM c""",
-    "t_sample_split" ->
-      """SELECT doc_id,
-                CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'train'
-                     WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'f3' THEN 'val'
-                     ELSE 'test' END AS split
-         FROM documents""",
-    "t_clean" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks,
-                           list_filter(string_split(text, ' '),
-                             x -> x NOT IN ('the', 'a')) AS kept
-                    FROM documents)
-         SELECT doc_id,
-                CAST(length(text) AS INTEGER) AS raw_len,
-                CAST(length(array_to_string(kept, ' ')) AS INTEGER) AS clean_len,
-                CAST(len(toks) - len(kept) AS INTEGER) AS n_removed
-         FROM t""",
-    "t_repetition" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-         g AS (SELECT doc_id, CAST(len(toks) - 2 AS INTEGER) AS n_grams,
-                      list_transform(generate_series(1, len(toks) - 2),
-                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS grams
-               FROM t WHERE len(toks) >= 3)
-         SELECT doc_id, n_grams,
-                CAST(len(list_distinct(grams)) AS INTEGER) AS n_distinct,
-                round(1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / n_grams, 6)
-                  AS rep_ratio
-         FROM g""",
-    "t_top_terms" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-         tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
-         dfreq AS (SELECT tok, count(DISTINCT doc_id) AS df_cnt FROM toks GROUP BY 1),
-         r AS (SELECT doc_id, tok, tf, df_cnt,
-                      row_number() OVER (PARTITION BY doc_id
-                        ORDER BY CAST(tf AS DOUBLE)/df_cnt DESC, tok) AS rank
-               FROM tf JOIN dfreq USING (tok))
-         SELECT doc_id, tok, CAST(tf AS BIGINT) AS tf,
-                CAST(df_cnt AS BIGINT) AS df_cnt, CAST(rank AS INTEGER) AS rank
-         FROM r WHERE rank <= 3""",
-    "t_stratified" ->
-      """SELECT doc_id, lang, CAST(rn AS INTEGER) AS rn
-         FROM (SELECT doc_id, lang,
-                      row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
-               FROM documents)
-         WHERE (rn - 1) % 5 = 0""",
-    "t_pack" ->
-      """WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
-                           CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens
-                    FROM documents),
-         w AS (SELECT doc_id, shard, n_tokens,
-                      CAST(COALESCE(sum(n_tokens) OVER (
-                        PARTITION BY shard ORDER BY doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                        AS BIGINT) AS tokens_before
-               FROM t)
-         SELECT doc_id, shard, n_tokens, tokens_before,
-                tokens_before // 2048 AS bin_id
-         FROM w""",
-    "t_confusion" ->
-      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-         c AS (SELECT doc_id, lang,
-                 len(list_filter(toks, x -> x IN ('the','a','of','and','is'))) AS n_en,
-                 len(list_filter(toks, x -> x IN ('el','la','los','es','y'))) AS n_es,
-                 len(list_filter(toks, x -> x IN ('le','les','des','et','est'))) AS n_fr,
-                 len(list_filter(toks, x -> x IN ('der','die','das','und','ist'))) AS n_de,
-                 len(list_filter(toks, x -> x IN ('de0','shi4','le0','zai4','wo3'))) AS n_zh
-               FROM t),
-         p AS (SELECT lang,
-                 CASE WHEN n_zh > greatest(n_en, n_es, n_fr, n_de) THEN 'zh'
-                      WHEN n_de > greatest(n_en, n_es, n_fr) THEN 'de'
-                      WHEN n_fr > greatest(n_en, n_es) THEN 'fr'
-                      WHEN n_es > n_en THEN 'es'
-                      ELSE 'en' END AS pred_lang
-               FROM c),
-         cm AS (SELECT lang, pred_lang, count(*) AS n FROM p GROUP BY 1, 2)
-         SELECT lang, pred_lang, n,
-                round(CAST(n AS DOUBLE) /
-                  sum(n) OVER (PARTITION BY lang), 6) AS recall_frac,
-                round(CAST(n AS DOUBLE) /
-                  sum(n) OVER (PARTITION BY pred_lang), 6) AS precision_frac
-         FROM cm""",
-    "t_calibration" ->
-      // all-integer bin; mean_conf via exact decimal sum over identical
-      // IEEE divisions; accuracy one division of exact integers
-      """WITH t AS (SELECT lang, string_split(text, ' ') AS toks FROM documents),
-         c AS (SELECT lang,
-                 CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','is'))) AS INTEGER) AS n_en,
-                 CAST(len(list_filter(toks, x -> x IN ('el','la','los','es','y'))) AS INTEGER) AS n_es,
-                 CAST(len(list_filter(toks, x -> x IN ('le','les','des','et','est'))) AS INTEGER) AS n_fr,
-                 CAST(len(list_filter(toks, x -> x IN ('der','die','das','und','ist'))) AS INTEGER) AS n_de,
-                 CAST(len(list_filter(toks, x -> x IN ('de0','shi4','le0','zai4','wo3'))) AS INTEGER) AS n_zh,
-                 CAST(len(toks) AS INTEGER) AS n_toks
-               FROM t),
-         s AS (SELECT lang,
-                 CASE WHEN n_zh > greatest(n_en, n_es, n_fr, n_de) THEN 'zh'
-                      WHEN n_de > greatest(n_en, n_es, n_fr) THEN 'de'
-                      WHEN n_fr > greatest(n_en, n_es) THEN 'fr'
-                      WHEN n_es > n_en THEN 'es'
-                      ELSE 'en' END AS pred_lang,
-                 greatest(n_en, n_es, n_fr, n_de, n_zh) AS win, n_toks
-               FROM c)
-         SELECT CAST((win * 20) // n_toks AS INTEGER) AS bin,
-                count(*) AS n_docs,
-                round(CAST(sum(CAST(CAST(win AS DOUBLE) / CAST(n_toks AS DOUBLE)
-                                    AS DECIMAL(28,16))) AS DOUBLE) / count(*), 6) AS mean_conf,
-                round(CAST(sum(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END) AS DOUBLE)
-                      / count(*), 6) AS accuracy
-         FROM s GROUP BY 1""",
-    "t_redact" ->
-      """SELECT doc_id,
-                CAST(len(regexp_extract_all(text, '\b(customer|order|spark)\b')) AS INTEGER) AS n_hits,
-                CAST(length(regexp_replace(text, '\b(customer|order|spark)\b', '<x>', 'g')) AS INTEGER) AS red_len,
-                md5(regexp_replace(text, '\b(customer|order|spark)\b', '<x>', 'g')) AS red_hash
-         FROM documents""",
-    "t_dup_spans" ->
-      """WITH sp AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-                    generate_series(1, len(toks) - 7),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' ||
-                         toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5] || ' ' ||
-                         toks[i+6] || ' ' || toks[i+7]))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-           WHERE len(toks) >= 8),
-         dfreq AS (SELECT sh, count(DISTINCT doc_id) AS df_cnt FROM sp GROUP BY 1),
-         sizes AS (SELECT doc_id, count(*) AS n_spans FROM sp GROUP BY 1),
-         dups AS (SELECT doc_id, count(*) AS n_dup
-                  FROM sp JOIN dfreq USING (sh) WHERE df_cnt >= 2 GROUP BY 1)
-         SELECT s.doc_id, s.n_spans, COALESCE(d.n_dup, 0) AS n_dup,
-                round(CAST(COALESCE(d.n_dup, 0) AS DOUBLE) / s.n_spans, 6) AS dup_ratio
-         FROM sizes s LEFT JOIN dups d USING (doc_id)""",
-    "d_exact" ->
-      """SELECT md5(text) AS text_hash, count(*) AS n_copies, min(doc_id) AS keep_id
-         FROM documents GROUP BY 1""",
-    "d_dup_span_extract" ->
-      // positional 8-token windows (1-based i → 0-based pos), global
-      // occ >= 2, then the same gaps-and-islands merge (running max end,
-      // new island when pos > prev_end)
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-         w AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 7)) AS i
-               FROM t WHERE len(toks) >= 8),
-         g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-                      array_to_string(toks[i:i+7], ' ') AS gram
-               FROM w),
-         f AS (SELECT gram, count(*) AS occ FROM g GROUP BY 1),
-         d AS (SELECT doc_id, pos FROM g JOIN f USING (gram) WHERE occ >= 2),
-         m AS (SELECT doc_id, pos,
-                 max(pos + 7) OVER (PARTITION BY doc_id ORDER BY pos
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-               FROM d),
-         fl AS (SELECT doc_id, pos,
-                  CASE WHEN prev_end IS NULL OR pos > prev_end
-                       THEN 1 ELSE 0 END AS ni
-                FROM m),
-         gr AS (SELECT doc_id, pos,
-                  sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-                FROM fl)
-         SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-                CAST(max(pos) + 7 AS BIGINT) AS span_end,
-                count(*) AS n_windows
-         FROM gr GROUP BY doc_id, island""",
-    "d_dedup_cut" ->
-      // the span replay (identical CTE chain) + positional token table,
-      // NOT EXISTS range anti join, order-preserving string_agg, md5 gate;
-      // fully-cut docs surface as (0, md5(''))
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-         w AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 7)) AS i
-               FROM t WHERE len(toks) >= 8),
-         g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-                      array_to_string(toks[i:i+7], ' ') AS gram
-               FROM w),
-         f AS (SELECT gram, count(*) AS occ FROM g GROUP BY 1),
-         d AS (SELECT doc_id, pos FROM g JOIN f USING (gram) WHERE occ >= 2),
-         m AS (SELECT doc_id, pos,
-                 max(pos + 7) OVER (PARTITION BY doc_id ORDER BY pos
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-               FROM d),
-         fl AS (SELECT doc_id, pos,
-                  CASE WHEN prev_end IS NULL OR pos > prev_end
-                       THEN 1 ELSE 0 END AS ni
-                FROM m),
-         gr AS (SELECT doc_id, pos,
-                  sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-                FROM fl),
-         spans AS (SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-                          CAST(max(pos) + 7 AS BIGINT) AS span_end
-                   FROM gr GROUP BY doc_id, island),
-         tok AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, toks[i] AS tok
-                 FROM (SELECT doc_id, toks,
-                              unnest(generate_series(1, len(toks))) AS i
-                       FROM t)),
-         kept AS (SELECT k.doc_id, k.pos, k.tok FROM tok k
-                  WHERE NOT EXISTS (
-                    SELECT 1 FROM spans s
-                    WHERE s.doc_id = k.doc_id
-                      AND k.pos BETWEEN s.span_start AND s.span_end)),
-         agg AS (SELECT doc_id, count(*) AS n_tokens_kept,
-                   md5(string_agg(tok, ' ' ORDER BY pos)) AS cleaned_hash
-                 FROM kept GROUP BY 1)
-         SELECT dd.doc_id,
-                CAST(COALESCE(a.n_tokens_kept, 0) AS BIGINT) AS n_tokens_kept,
-                COALESCE(a.cleaned_hash, md5('')) AS cleaned_hash
-         FROM documents dd LEFT JOIN agg a USING (doc_id)""",
-    "d_line_dedup" ->
-      // same fixed 8-token chunking ((len+7)//8 lines, inclusive-slice
-      // semantics match Spark's slice(t, i*8+1, 8)), same df >= 2 rule
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         lines AS (
-           SELECT doc_id, unnest(list_transform(range(0, (len(t)+7)//8),
-                    i -> array_to_string(t[i*8+1:i*8+8], ' '))) AS line
-           FROM toks),
-         lf AS (SELECT line, count(DISTINCT doc_id) AS line_df FROM lines GROUP BY 1)
-         SELECT doc_id, count(*) AS n_lines,
-                CAST(sum(CASE WHEN line_df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
-                round(CAST(sum(CASE WHEN line_df >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
-                      / count(*), 6) AS boiler_ratio
-         FROM lines JOIN lf USING (line) GROUP BY doc_id""",
-    "t_lm_quality" ->
-      // p's decimal dividend (c12+1.0) promotes to double exactly, so the
-      // division is the same IEEE op as the engine's; DECIMAL(28,16)
-      // accumulation makes the per-doc sum order-independent
-      """WITH grams AS (
-           SELECT doc_id,
-                  unnest(list_transform(generate_series(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i+1])) AS pair
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-           WHERE len(toks) >= 2),
-         bi AS (SELECT pair, count(*) AS c12 FROM grams GROUP BY 1),
-         sp AS (SELECT pair, c12, string_split(pair, ' ')[1] AS w1 FROM bi),
-         ctx AS (SELECT w1, sum(c12) AS c1 FROM sp GROUP BY 1),
-         v AS (SELECT count(DISTINCT tok) AS v
-               FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)),
-         lm AS (SELECT sp.pair, (sp.c12 + 1.0) / (ctx.c1 + v.v) AS p
-                FROM sp JOIN ctx USING (w1), v)
-         SELECT g.doc_id, count(*) AS n_bigrams,
-                round(CAST(sum(CAST(p AS DECIMAL(28,16))) AS DOUBLE) /
-                      count(*), 9) AS mean_p
-         FROM grams g JOIN lm USING (pair)
-         GROUP BY 1""",
-    "t_ngram_lm" ->
-      """WITH grams AS (
-           SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i+1])) AS pair
-           FROM (SELECT string_split(text, ' ') AS toks FROM documents)
-           WHERE len(toks) >= 2),
-         bi AS (SELECT pair, count(*) AS c12 FROM grams GROUP BY 1),
-         sp AS (SELECT pair, c12, string_split(pair, ' ')[1] AS w1 FROM bi),
-         ctx AS (SELECT w1, sum(c12) AS c1 FROM sp GROUP BY 1),
-         v AS (SELECT count(DISTINCT tok) AS v
-               FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents))
-         SELECT sp.pair, CAST(sp.c12 AS BIGINT) AS c12, CAST(ctx.c1 AS BIGINT) AS c1,
-                round((sp.c12 + 1.0) / (ctx.c1 + v.v), 9) AS p
-         FROM sp JOIN ctx USING (w1), v
-         ORDER BY c12 DESC, pair ASC LIMIT 50""",
-    "t_source_overlap" ->
-      // identical per-source distinct shingle sets, the same shingle-key
-      // pair join, per-source totals re-joined for the containment ratio
-      s"""WITH $shingleSql,
-         ss AS MATERIALIZED (
-           SELECT DISTINCT d.source, s.sh
-           FROM sh s JOIN documents d USING (doc_id)),
-         tot AS (SELECT source, count(*) AS n_sh FROM ss GROUP BY 1),
-         pr AS (SELECT a.source AS src_a, b.source AS src_b,
-                       count(*) AS n_common
-                FROM ss a JOIN ss b
-                  ON a.sh = b.sh AND a.source <> b.source
-                GROUP BY 1, 2)
-         SELECT pr.src_a, pr.src_b, pr.n_common, t.n_sh,
-                round(CAST(pr.n_common AS DOUBLE) / t.n_sh, 6)
-                  AS containment
-         FROM pr JOIN tot t ON pr.src_a = t.source""",
-    "t_render_dpo" ->
-      // identical hashed-linear scores, the same argmax/argmin structs
-      // (ties → smallest doc_id on both ends), byte-identical rendering
-      """WITH t AS (SELECT doc_id, source, text,
-                           string_split(text, ' ') AS toks
-                    FROM documents),
-         c AS (SELECT doc_id, source, text, toks,
-                 CAST(list_aggregate(list_transform(toks,
-                   t -> ('0x' || substr(md5('w' ||
-                          CAST(('0x' || substr(md5(t), 1, 6))::BIGINT % 64
-                               AS VARCHAR)), 1, 4))::BIGINT % 2001 - 1000),
-                   'sum') AS BIGINT) AS w_sum
-               FROM t),
-         p AS (SELECT source,
-                 -((max(struct_pack(w := w_sum, nd := -doc_id))).nd)
-                   AS chosen_doc,
-                 (max(struct_pack(w := w_sum, nd := -doc_id))).w AS cs,
-                 (min(struct_pack(w := w_sum, d := doc_id))).d
-                   AS rejected_doc,
-                 (min(struct_pack(w := w_sum, d := doc_id))).w AS rs,
-                 count(*) AS n
-               FROM c GROUP BY 1),
-         r AS (SELECT p.source, p.chosen_doc, p.rejected_doc,
-                      p.cs - p.rs AS margin,
-                      '<|prompt|>' ||
-                        array_to_string(list_slice(ch.toks, 1, 8), ' ') ||
-                        chr(10) || '<|chosen|>' || ch.text ||
-                        chr(10) || '<|rejected|>' || rj.text || '<|end|>'
-                        AS record
-               FROM p
-               JOIN c ch ON p.chosen_doc = ch.doc_id
-               JOIN c rj ON p.rejected_doc = rj.doc_id
-               WHERE p.n >= 2 AND p.chosen_doc <> p.rejected_doc)
-         SELECT source, chosen_doc, rejected_doc, margin,
-                CAST(length(record) AS INTEGER) AS record_chars,
-                md5(record) AS record_md5
-         FROM r""",
-    "t_span_corrupt" ->
-      // identical md5-fraction masking, sentinel ordinals, and
-      // order-preserving input/target rendering; string_agg(ORDER BY pos)
-      // replays the sort-by-position collect
-      """WITH ex AS MATERIALIZED (
-           SELECT doc_id, i - 1 AS pos, tok, (i - 1) // 3 AS span,
-                  (('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':'
-                      || CAST((i - 1) // 3 AS VARCHAR)), 1, 6))::BIGINT
-                    < 2516582) AS masked
-           FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-                        generate_subscripts(string_split(text, ' '), 1) AS i
-                 FROM documents)),
-         spanord AS (
-           SELECT doc_id, span,
-                  row_number() OVER (PARTITION BY doc_id ORDER BY span) AS k
-           FROM (SELECT DISTINCT doc_id, span FROM ex WHERE masked)),
-         withk AS (SELECT e.*, s.k FROM ex e
-                   LEFT JOIN spanord s USING (doc_id, span)),
-         inp AS (
-           SELECT doc_id, md5(string_agg(item, ' ' ORDER BY pos)) AS input_md5
-           FROM (SELECT doc_id, pos,
-                   CASE WHEN masked THEN '<X' || CAST(k AS VARCHAR) || '>'
-                        ELSE tok END AS item
-                 FROM withk WHERE NOT masked OR pos % 3 = 0)
-           GROUP BY 1),
-         tgt AS (
-           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens_masked,
-                  CAST(count(DISTINCT span) AS BIGINT) AS n_spans_masked,
-                  md5(string_agg(item, ' ' ORDER BY pos)) AS target_md5
-           FROM (SELECT doc_id, pos, span,
-                   CASE WHEN pos % 3 = 0
-                        THEN '<X' || CAST(k AS VARCHAR) || '> ' || tok
-                        ELSE tok END AS item
-                 FROM withk WHERE masked)
-           GROUP BY 1)
-         SELECT d.doc_id,
-                COALESCE(t.n_spans_masked, 0) AS n_spans_masked,
-                COALESCE(t.n_tokens_masked, 0) AS n_tokens_masked,
-                i.input_md5,
-                COALESCE(t.target_md5, md5('')) AS target_md5
-         FROM documents d JOIN inp i USING (doc_id)
-         LEFT JOIN tgt t USING (doc_id)""",
-    "t_bm25" ->
-      // identical tf/df/stats reductions and the identically-parenthesized
-      // IEEE chain; the per-term score casts to DECIMAL(28,16) before the
-      // per-doc sum so accumulation order cannot matter
-      """WITH d AS (
-           SELECT doc_id, string_split(text, ' ') AS toks,
-                  len(string_split(text, ' ')) AS len
-           FROM documents),
-         stats AS (SELECT count(*) AS n_docs,
-                          CAST(sum(CAST(len AS DECIMAL(28,6))) AS DOUBLE)
-                            AS sum_len
-                   FROM d),
-         tf AS (SELECT doc_id, len, tok, count(*) AS tf
-                FROM (SELECT doc_id, len, unnest(toks) AS tok FROM d)
-                WHERE tok IN ('hash', 'merge', 'vector')
-                GROUP BY 1, 2, 3),
-         dfx AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-         ts AS (SELECT doc_id,
-                  CAST((n_docs - df + 0.5) / (df + 0.5)
-                       * (tf * 2.2)
-                       / (tf + 1.2 * (0.25 + 0.75 * len / (sum_len / n_docs)))
-                    AS DECIMAL(28,16)) AS term_score
-                FROM tf JOIN dfx USING (tok), stats)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-                round(CAST(sum(term_score) AS DOUBLE), 6) AS score
-         FROM ts GROUP BY 1
-         ORDER BY CAST(sum(term_score) AS DOUBLE) DESC, doc_id ASC
-         LIMIT 20""",
-    "t_kn_lm" ->
-      // the identical four integer statistics off one bigram frame and the
-      // identically-parenthesized IEEE chain (D = 0.75 exactly
-      // representable; / is float division in both engines)
-      """WITH grams AS (
-           SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i+1])) AS pair
-           FROM (SELECT string_split(text, ' ') AS toks FROM documents)
-           WHERE len(toks) >= 2),
-         bi AS MATERIALIZED (
-           SELECT pair, count(*) AS c12,
-                  string_split(pair, ' ')[1] AS w1,
-                  string_split(pair, ' ')[2] AS w2
-           FROM grams GROUP BY 1),
-         ctx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1,
-                        count(*) AS n1_fwd
-                 FROM bi GROUP BY 1),
-         prec AS (SELECT w2, count(*) AS n1_prec FROM bi GROUP BY 1),
-         total AS (SELECT count(*) AS nb FROM bi)
-         SELECT bi.pair, CAST(bi.c12 AS BIGINT) AS c12, ctx.c1,
-                ctx.n1_fwd, prec.n1_prec,
-                round(greatest(bi.c12 - 0.75, 0.0) / ctx.c1
-                      + ((0.75 * ctx.n1_fwd) / ctx.c1)
-                        * (prec.n1_prec / total.nb), 9) AS p_kn
-         FROM bi JOIN ctx USING (w1) JOIN prec USING (w2), total
-         ORDER BY c12 DESC, pair ASC LIMIT 50""",
-    "t_kn_score" ->
-      // the t_kn_lm statistics CTEs restricted to the train split, then
-      // the identical left-join apply with the identically-parenthesized
-      // backoff chain (integer/integer division is float division in
-      // both engines; the decimal per-doc sum is order-independent)
-      """WITH tg AS (
-           SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i+1])) AS pair
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks
-                 FROM documents WHERE doc_id % 5 = 0)
-           WHERE len(toks) >= 2),
-         bi AS MATERIALIZED (
-           SELECT pair, count(*) AS c12,
-                  string_split(pair, ' ')[1] AS w1,
-                  string_split(pair, ' ')[2] AS w2
-           FROM tg GROUP BY 1),
-         ctx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1,
-                        count(*) AS n1_fwd
-                 FROM bi GROUP BY 1),
-         prec AS (SELECT w2, count(*) AS n1_prec FROM bi GROUP BY 1),
-         total AS (SELECT count(*) AS nb FROM bi),
-         cg AS (SELECT doc_id, pair,
-                       string_split(pair, ' ')[1] AS w1,
-                       string_split(pair, ' ')[2] AS w2
-                FROM (SELECT doc_id,
-                        unnest(list_transform(generate_series(1, len(toks) - 1),
-                          i -> toks[i] || ' ' || toks[i+1])) AS pair
-                      FROM (SELECT doc_id, string_split(text, ' ') AS toks
-                            FROM documents)
-                      WHERE len(toks) >= 2)),
-         sc AS (SELECT cg.doc_id,
-                  CASE WHEN ctx.c1 IS NOT NULL THEN
-                    greatest(COALESCE(bi.c12, 0) - 0.75, 0.0) / ctx.c1
-                      + ((0.75 * ctx.n1_fwd) / ctx.c1)
-                        * (COALESCE(prec.n1_prec, 0) / total.nb)
-                  ELSE COALESCE(prec.n1_prec, 0) / total.nb END AS p,
-                  CASE WHEN ctx.c1 IS NULL THEN 1 ELSE 0 END AS oov
-                FROM cg
-                LEFT JOIN bi ON cg.pair = bi.pair
-                LEFT JOIN ctx ON cg.w1 = ctx.w1
-                LEFT JOIN prec ON cg.w2 = prec.w2
-                CROSS JOIN total)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-                CAST(sum(oov) AS BIGINT) AS n_oov_ctx,
-                round(CAST(sum(CAST(p AS DECIMAL(28,16))) AS DOUBLE)
-                  / count(*), 9) AS mean_p
-         FROM sc GROUP BY 1""",
-    "t_bpe_pairs" ->
-      """WITH grams AS (
-           SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i+1])) AS pair
-           FROM (SELECT string_split(text, ' ') AS toks FROM documents)
-           WHERE len(toks) >= 2)
-         SELECT pair, count(*) AS n FROM grams
-         GROUP BY 1 ORDER BY n DESC, pair ASC LIMIT 20""",
-    "t_decontaminate" ->
-      s"""WITH $shingleSql,
-         corpus AS (SELECT s.doc_id, s.sh FROM sh s JOIN documents d USING(doc_id)
-                    WHERE d.source <> 'src0'),
-         bench AS (SELECT DISTINCT s.sh FROM sh s JOIN documents d USING(doc_id)
-                   WHERE d.source = 'src0'),
-         sizes AS (SELECT doc_id, count(*) AS n_sh FROM corpus GROUP BY 1),
-         hits AS (SELECT doc_id, count(*) AS n_hit FROM corpus
-                  WHERE sh IN (SELECT sh FROM bench) GROUP BY 1)
-         SELECT s.doc_id, s.n_sh, h.n_hit,
-                round(CAST(h.n_hit AS DOUBLE) / s.n_sh, 6) AS overlap
-         FROM sizes s JOIN hits h USING(doc_id)""",
-    "d_ngram_jaccard" ->
-      // mirrors the engine's two-phase plan exactly: candidates must share
-      // >= 1 RARE shingle (doc-frequency <= 1000, the stop-shingle cap);
-      // the intersection is then exact over the FULL shingle sets, so the
-      // Jaccard value is unbiased by the cap
-      s"""WITH $shingleSql,
-         dfreq AS (SELECT sh, count(*) AS df_cnt FROM sh GROUP BY 1),
-         rare AS (SELECT s.doc_id, s.sh FROM sh s JOIN dfreq USING (sh)
-                  WHERE df_cnt <= 1000),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                  FROM rare a JOIN rare b ON a.sh = b.sh AND a.doc_id < b.doc_id),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         p AS (SELECT doc_a, doc_b, count(*) AS inter_cnt
-               FROM cand
-               JOIN sh a ON a.doc_id = cand.doc_a
-               JOIN sh b ON b.doc_id = cand.doc_b AND b.sh = a.sh
-               GROUP BY 1, 2)
-         SELECT doc_a, doc_b, CAST(inter_cnt AS BIGINT) AS inter_cnt,
-                round(CAST(inter_cnt AS DOUBLE)/(sa.n + sb.n - inter_cnt), 6) AS jaccard
-         FROM p JOIN sz sa ON p.doc_a = sa.doc_id JOIN sz sb ON p.doc_b = sb.doc_id
-         WHERE inter_cnt * 10 >= (sa.n + sb.n - inter_cnt) * 3""",
-    "d_ppjoin" ->
-      // mirrors the engine's prefix rule: per-doc (df, shingle) order,
-      // prefix size n - ceil(3n/10) + 1, exact intersection over full sets
-      s"""WITH $shingleSql,
-         dfreq AS (SELECT sh, count(*) AS df_cnt FROM sh GROUP BY 1),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         pre AS (SELECT doc_id, sh FROM (
-                   SELECT s.doc_id, s.sh,
-                          row_number() OVER (PARTITION BY s.doc_id
-                            ORDER BY d.df_cnt, s.sh) AS rn,
-                          z.n
-                   FROM sh s JOIN dfreq d USING (sh) JOIN sz z USING (doc_id))
-                 WHERE rn <= n - ((3 * n + 9) // 10) + 1),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                  FROM pre a JOIN pre b ON a.sh = b.sh AND a.doc_id < b.doc_id),
-         p AS (SELECT doc_a, doc_b, count(*) AS inter_cnt
-               FROM cand
-               JOIN sh a ON a.doc_id = cand.doc_a
-               JOIN sh b ON b.doc_id = cand.doc_b AND b.sh = a.sh
-               GROUP BY 1, 2)
-         SELECT doc_a, doc_b, CAST(inter_cnt AS BIGINT) AS inter_cnt,
-                round(CAST(inter_cnt AS DOUBLE)/(sa.n + sb.n - inter_cnt), 6) AS jaccard
-         FROM p JOIN sz sa ON p.doc_a = sa.doc_id JOIN sz sb ON p.doc_b = sb.doc_id
-         WHERE inter_cnt * 10 >= (sa.n + sb.n - inter_cnt) * 3""",
-    "d_ppjoin_capped" ->
-      // the d_ppjoin replay with the exact rank-derived cap: the value at
-      // ascending rank ceil(0.99·k) of the prefix-key frequency table
-      // (total order (f, sh)), ×4, floored at 16; keys above it leave the
-      // candidate join. Both engines derive the identical integer cap.
-      s"""WITH $shingleSql,
-         dfreq AS (SELECT sh, count(*) AS df_cnt FROM sh GROUP BY 1),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         pre AS (SELECT doc_id, sh FROM (
-                   SELECT s.doc_id, s.sh,
-                          row_number() OVER (PARTITION BY s.doc_id
-                            ORDER BY d.df_cnt, s.sh) AS rn,
-                          z.n
-                   FROM sh s JOIN dfreq d USING (sh) JOIN sz z USING (doc_id))
-                 WHERE rn <= n - ((3 * n + 9) // 10) + 1),
-         pfreq AS (SELECT sh, count(*) AS pf FROM pre GROUP BY 1),
-         kq AS (SELECT count(*) AS k FROM pfreq),
-         qv AS (SELECT max(pf) AS q FROM (
-                  SELECT pf FROM pfreq ORDER BY pf ASC, sh ASC
-                  LIMIT (SELECT CAST(ceil(0.99 * k) AS BIGINT) FROM kq))),
-         cap AS (SELECT greatest(16, least(q * 4, 2147483647)) AS c FROM qv),
-         keep AS (SELECT p.doc_id, p.sh FROM pre p JOIN pfreq USING (sh), cap
-                  WHERE pf <= c),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                  FROM keep a JOIN keep b ON a.sh = b.sh AND a.doc_id < b.doc_id),
-         p AS (SELECT doc_a, doc_b, count(*) AS inter_cnt
-               FROM cand
-               JOIN sh a ON a.doc_id = cand.doc_a
-               JOIN sh b ON b.doc_id = cand.doc_b AND b.sh = a.sh
-               GROUP BY 1, 2)
-         SELECT doc_a, doc_b, CAST(inter_cnt AS BIGINT) AS inter_cnt,
-                round(CAST(inter_cnt AS DOUBLE)/(sa.n + sb.n - inter_cnt), 6) AS jaccard
-         FROM p JOIN sz sa ON p.doc_a = sa.doc_id JOIN sz sb ON p.doc_b = sb.doc_id
-         WHERE inter_cnt * 10 >= (sa.n + sb.n - inter_cnt) * 3""",
-    "d_containment" ->
-      // same candidate discipline as the engine: rare-shingle (df <= 1000)
-      // candidates, exact intersection over full sets, then BOTH directions
-      // scored against the source doc's own shingle count
-      s"""WITH $shingleSql,
-         dfreq AS (SELECT sh, count(*) AS df_cnt FROM sh GROUP BY 1),
-         rare AS (SELECT s.doc_id, s.sh FROM sh s JOIN dfreq USING (sh)
-                  WHERE df_cnt <= 1000),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                  FROM rare a JOIN rare b ON a.sh = b.sh AND a.doc_id < b.doc_id),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         p AS (SELECT doc_a, doc_b, count(*) AS inter_cnt
-               FROM cand
-               JOIN sh a ON a.doc_id = cand.doc_a
-               JOIN sh b ON b.doc_id = cand.doc_b AND b.sh = a.sh
-               GROUP BY 1, 2),
-         directed AS (SELECT doc_a, doc_b, inter_cnt FROM p
-                      UNION ALL
-                      SELECT doc_b AS doc_a, doc_a AS doc_b, inter_cnt FROM p)
-         SELECT d.doc_a, d.doc_b, CAST(d.inter_cnt AS BIGINT) AS inter_cnt,
-                CAST(sa.n AS BIGINT) AS n_a,
-                round(CAST(d.inter_cnt AS DOUBLE) / sa.n, 6) AS containment
-         FROM directed d JOIN sz sa ON d.doc_a = sa.doc_id
-         WHERE d.inter_cnt * 10 >= sa.n * 7""",
-    "d_minhash_lsh" ->
-      s"""WITH $shingleSql,
-         sigs AS (SELECT doc_id, seed, min(md5(sh || ':' || CAST(seed AS VARCHAR))) AS sig
-                  FROM sh, (SELECT unnest(generate_series(0, 14)) AS seed) s GROUP BY 1, 2),
-         bands AS (SELECT doc_id, seed // 3 AS band,
-                          md5(string_agg(sig, ',' ORDER BY seed)) AS bkey
-                   FROM sigs GROUP BY 1, 2),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                  FROM bands a JOIN bands b
-                    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)
-         SELECT doc_a, doc_b,
-                CAST(sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS BIGINT) AS n_equal,
-                round(CAST(sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS DOUBLE)/15, 6) AS est_sim
-         FROM cand JOIN sigs sa ON cand.doc_a = sa.doc_id
-                   JOIN sigs sb ON cand.doc_b = sb.doc_id AND sa.seed = sb.seed
-         GROUP BY doc_a, doc_b""",
-    "d_dedup_eval" ->
-      // both declared pipelines' oracle bodies composed over one shared
-      // shingle CTE; thresholds as the same rationals
-      s"""WITH $shingleSql,
-         dfreq AS (SELECT sh, count(*) AS df_cnt FROM sh GROUP BY 1),
-         rare AS (SELECT s.doc_id, s.sh FROM sh s JOIN dfreq USING (sh)
-                  WHERE df_cnt <= 1000),
-         candt AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                   FROM rare a JOIN rare b ON a.sh = b.sh AND a.doc_id < b.doc_id),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         pt AS (SELECT doc_a, doc_b, count(*) AS inter_cnt
-                FROM candt
-                JOIN sh a ON a.doc_id = candt.doc_a
-                JOIN sh b ON b.doc_id = candt.doc_b AND b.sh = a.sh
-                GROUP BY 1, 2),
-         truth AS (SELECT doc_a, doc_b
-                   FROM pt JOIN sz sa ON pt.doc_a = sa.doc_id
-                           JOIN sz sb ON pt.doc_b = sb.doc_id
-                   WHERE inter_cnt * 10 >= (sa.n + sb.n - inter_cnt) * 3),
-         sigs AS (SELECT doc_id, seed, min(md5(sh || ':' || CAST(seed AS VARCHAR))) AS sig
-                  FROM sh, (SELECT unnest(generate_series(0, 14)) AS seed) s GROUP BY 1, 2),
-         bands AS (SELECT doc_id, seed // 3 AS band,
-                          md5(string_agg(sig, ',' ORDER BY seed)) AS bkey
-                   FROM sigs GROUP BY 1, 2),
-         candp AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                   FROM bands a JOIN bands b
-                     ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-         pred AS (SELECT doc_a, doc_b
-                  FROM (SELECT doc_a, doc_b,
-                               sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS n_equal
-                        FROM candp JOIN sigs sa ON candp.doc_a = sa.doc_id
-                                   JOIN sigs sb ON candp.doc_b = sb.doc_id AND sa.seed = sb.seed
-                        GROUP BY 1, 2) g
-                  WHERE n_equal >= 4),
-         np AS (SELECT count(*) AS n_pred FROM pred),
-         nt AS (SELECT count(*) AS n_truth FROM truth),
-         ntp AS (SELECT count(*) AS n_tp FROM pred
-                 WHERE EXISTS (SELECT 1 FROM truth t
-                               WHERE t.doc_a = pred.doc_a AND t.doc_b = pred.doc_b))
-         SELECT CAST(n_tp AS BIGINT) AS n_tp, CAST(n_pred AS BIGINT) AS n_pred,
-                CAST(n_truth AS BIGINT) AS n_truth,
-                round(CAST(n_tp AS DOUBLE)/CAST(n_pred AS DOUBLE), 6) AS prec,
-                round(CAST(n_tp AS DOUBLE)/CAST(n_truth AS DOUBLE), 6) AS rec
-         FROM np, nt, ntp""",
-    "d_cascade" ->
-      // tier 1 = the d_exact keep rule; tier 2 = the d_dedup_eval minhash
-      // chain rebuilt over tier-1 survivors only; the disposition CASE
-      // composes both
-      """WITH corpus AS MATERIALIZED (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000 AS doc_id, text FROM documents
-           WHERE doc_id % 50 = 0),
-         keep AS MATERIALIZED (
-           SELECT min(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
-         s1 AS (SELECT d.doc_id, d.text FROM corpus d
-                JOIN keep k ON d.doc_id = k.doc_id),
-         sh AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-                    generate_series(1, len(toks)-2),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM s1)
-           WHERE len(toks) >= 3),
-         sigs AS (SELECT doc_id, seed, min(md5(sh || ':' || CAST(seed AS VARCHAR))) AS sig
-                  FROM sh, (SELECT unnest(generate_series(0, 14)) AS seed) s GROUP BY 1, 2),
-         bands AS (SELECT doc_id, seed // 3 AS band,
-                          md5(string_agg(sig, ',' ORDER BY seed)) AS bkey
-                   FROM sigs GROUP BY 1, 2),
-         candp AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                   FROM bands a JOIN bands b
-                     ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-         losers AS MATERIALIZED (
-           SELECT DISTINCT doc_b FROM (
-             SELECT doc_a, doc_b,
-                    sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS n_equal
-             FROM candp JOIN sigs sa ON candp.doc_a = sa.doc_id
-                        JOIN sigs sb ON candp.doc_b = sb.doc_id AND sa.seed = sb.seed
-             GROUP BY 1, 2) g
-           WHERE n_equal >= 4)
-         SELECT d.doc_id,
-                CASE WHEN k.doc_id IS NULL THEN 'removed_exact'
-                     WHEN l.doc_b IS NOT NULL THEN 'removed_fuzzy'
-                     ELSE 'kept' END AS status
-         FROM corpus d
-         LEFT JOIN keep k ON d.doc_id = k.doc_id
-         LEFT JOIN losers l ON d.doc_id = l.doc_b""",
-    "d_threshold_sweep" ->
-      // the d_dedup_eval CTE chain with the threshold UNFILTERED pair
-      // table, swept by a 3-row cross join — groups with zero surviving
-      // pairs vanish identically in both engines
-      s"""WITH $shingleSql,
-         dfreq AS (SELECT sh, count(*) AS df_cnt FROM sh GROUP BY 1),
-         rare AS (SELECT s.doc_id, s.sh FROM sh s JOIN dfreq USING (sh)
-                  WHERE df_cnt <= 1000),
-         candt AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                   FROM rare a JOIN rare b ON a.sh = b.sh AND a.doc_id < b.doc_id),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         pt AS (SELECT doc_a, doc_b, count(*) AS inter_cnt
-                FROM candt
-                JOIN sh a ON a.doc_id = candt.doc_a
-                JOIN sh b ON b.doc_id = candt.doc_b AND b.sh = a.sh
-                GROUP BY 1, 2),
-         truth AS MATERIALIZED (
-           SELECT doc_a, doc_b
-           FROM pt JOIN sz sa ON pt.doc_a = sa.doc_id
-                   JOIN sz sb ON pt.doc_b = sb.doc_id
-           WHERE inter_cnt * 10 >= (sa.n + sb.n - inter_cnt) * 3),
-         sigs AS (SELECT doc_id, seed, min(md5(sh || ':' || CAST(seed AS VARCHAR))) AS sig
-                  FROM sh, (SELECT unnest(generate_series(0, 14)) AS seed) s GROUP BY 1, 2),
-         bands AS (SELECT doc_id, seed // 3 AS band,
-                          md5(string_agg(sig, ',' ORDER BY seed)) AS bkey
-                   FROM sigs GROUP BY 1, 2),
-         candp AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                   FROM bands a JOIN bands b
-                     ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-         predn AS (SELECT doc_a, doc_b,
-                          sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS n_equal
-                   FROM candp JOIN sigs sa ON candp.doc_a = sa.doc_id
-                              JOIN sigs sb ON candp.doc_b = sb.doc_id AND sa.seed = sb.seed
-                   GROUP BY 1, 2),
-         pm AS (SELECT p.n_equal,
-                       EXISTS (SELECT 1 FROM truth t
-                               WHERE t.doc_a = p.doc_a AND t.doc_b = p.doc_b)
-                         AS matched
-                FROM predn p),
-         ks AS (SELECT unnest([3, 4, 5]) AS k),
-         a AS (SELECT k, count(*) AS n_pred,
-                      sum(CASE WHEN matched THEN 1 ELSE 0 END) AS n_tp
-               FROM pm CROSS JOIN ks WHERE pm.n_equal >= ks.k GROUP BY 1),
-         nt AS (SELECT count(*) AS n_truth FROM truth)
-         SELECT CAST(k AS INTEGER) AS k, CAST(n_tp AS BIGINT) AS n_tp,
-                CAST(n_pred AS BIGINT) AS n_pred,
-                CAST(n_truth AS BIGINT) AS n_truth,
-                round(CAST(n_tp AS DOUBLE)/CAST(n_pred AS DOUBLE), 6) AS prec,
-                round(CAST(n_tp AS DOUBLE)/CAST(n_truth AS DOUBLE), 6) AS rec
-         FROM a, nt""",
-    "d_simhash" ->
-      """WITH tok AS (SELECT doc_id, tok, count(*) AS cnt
-                      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-                      GROUP BY 1, 2),
-         bits AS (SELECT doc_id, j,
-                         sum(CASE WHEN substr(md5(tok), j + 1, 1) IN ('8','9','a','b','c','d','e','f')
-                                  THEN cnt ELSE -cnt END) AS s
-                  FROM tok, (SELECT unnest(generate_series(0, 31)) AS j) js GROUP BY 1, 2)
-         SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
-         FROM bits GROUP BY 1""",
-    "d_simhash_pairs" ->
-      """WITH tok AS (SELECT doc_id, tok, count(*) AS cnt
-                      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-                      GROUP BY 1, 2),
-         bits AS (SELECT doc_id, j,
-                         sum(CASE WHEN substr(md5(tok), j + 1, 1) IN ('8','9','a','b','c','d','e','f')
-                                  THEN cnt ELSE -cnt END) AS s
-                  FROM tok, (SELECT unnest(generate_series(0, 31)) AS j) js GROUP BY 1, 2),
-         sh AS (SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
-                FROM bits GROUP BY 1)
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-         FROM sh a JOIN sh b ON (a.simhash >> 24) = (b.simhash >> 24) AND a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.simhash, b.simhash)) <= 2""",
-    "d_incremental" ->
-      s"""WITH $shingleSql,
-         sigs AS (SELECT doc_id, seed, min(md5(sh || ':' || CAST(seed AS VARCHAR))) AS sig
-                  FROM sh, (SELECT unnest(generate_series(0, 14)) AS seed) s GROUP BY 1, 2),
-         bands AS (SELECT doc_id, seed // 3 AS band,
-                          md5(string_agg(sig, ',' ORDER BY seed)) AS bkey
-                   FROM sigs GROUP BY 1, 2),
-         batchb AS (SELECT b.* FROM bands b JOIN documents d USING(doc_id)
-                    WHERE d.source = 'src18'),
-         corpb  AS (SELECT b.* FROM bands b JOIN documents d USING(doc_id)
-                    WHERE d.source <> 'src18'),
-         cand AS (SELECT DISTINCT a.doc_id AS bid, c.doc_id AS cid
-                  FROM batchb a JOIN corpb c ON a.band = c.band AND a.bkey = c.bkey),
-         eq AS (SELECT bid, cid,
-                       CAST(sum(CASE WHEN sa.sig = sc.sig THEN 1 ELSE 0 END) AS BIGINT) AS n_equal
-                FROM cand JOIN sigs sa ON cand.bid = sa.doc_id
-                          JOIN sigs sc ON cand.cid = sc.doc_id AND sa.seed = sc.seed
-                GROUP BY 1, 2
-                HAVING CAST(sum(CASE WHEN sa.sig = sc.sig THEN 1 ELSE 0 END) AS BIGINT) >= 9)
-         SELECT bid AS doc_id,
-                CAST(-(max(struct_pack(n := n_equal, nc := -cid)).nc) AS BIGINT) AS match_id,
-                max(struct_pack(n := n_equal, nc := -cid)).n AS n_equal
-         FROM eq GROUP BY 1""",
-    // same SimHash candidate graph as d_simhash_pairs, closed transitively:
-    // the recursive CTE enumerates reachable ids per node (fine at oracle
-    // scale; the engine side never materializes reachability — it
-    // min-label-propagates in O(diameter) joins). d_clusters_stars runs
-    // the large/small-star algorithm against the identical oracle.
-    "d_dbscan" ->
-      // identical simhash block, the 3-band pigeonhole candidate join,
-      // integer core test, min-reach components over core-core edges
-      // (the clustersCteSql recursion), min-cluster border attach
-      """WITH RECURSIVE tok AS (SELECT doc_id, tok, count(*) AS cnt
-                      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-                      GROUP BY 1, 2),
-         bits AS (SELECT doc_id, j,
-                         sum(CASE WHEN substr(md5(tok), j + 1, 1) IN ('8','9','a','b','c','d','e','f')
-                                  THEN cnt ELSE -cnt END) AS s
-                  FROM tok, (SELECT unnest(generate_series(0, 31)) AS j) js GROUP BY 1, 2),
-         sh AS MATERIALIZED (
-           SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
-           FROM bits GROUP BY 1),
-         bnd AS (SELECT doc_id, simhash, 0 AS bi, simhash >> 21 AS bk FROM sh
-                 UNION ALL
-                 SELECT doc_id, simhash, 1, (simhash >> 10) & 2047 FROM sh
-                 UNION ALL
-                 SELECT doc_id, simhash, 2, simhash & 1023 FROM sh),
-         prs AS MATERIALIZED (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM bnd a JOIN bnd b
-             ON a.bi = b.bi AND a.bk = b.bk AND a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
-         nbrs AS (SELECT doc_a AS doc_id, doc_b AS nb FROM prs
-                  UNION ALL SELECT doc_b, doc_a FROM prs),
-         core AS MATERIALIZED (
-           SELECT doc_id FROM (SELECT doc_id, count(*) AS deg FROM nbrs GROUP BY 1)
-           WHERE deg >= 2),
-         ce AS (SELECT doc_a, doc_b FROM prs
-                WHERE doc_a IN (SELECT doc_id FROM core)
-                  AND doc_b IN (SELECT doc_id FROM core)),
-         eds AS (SELECT doc_a AS src, doc_b AS dst FROM ce
-                 UNION SELECT doc_b, doc_a FROM ce),
-         reach AS (SELECT src AS node, src AS comp FROM eds
-                   UNION
-                   SELECT r.node, e.dst AS comp FROM reach r JOIN eds e ON e.src = r.comp),
-         labels AS (SELECT node AS doc_id, min(comp) AS cluster_id FROM reach GROUP BY 1),
-         corelab AS MATERIALIZED (
-           SELECT c.doc_id, COALESCE(l.cluster_id, c.doc_id) AS cluster_id
-           FROM core c LEFT JOIN labels l USING (doc_id)),
-         borderlab AS (
-           SELECT n.doc_id, min(cl.cluster_id) AS cluster_id
-           FROM nbrs n JOIN corelab cl ON n.nb = cl.doc_id
-           WHERE n.doc_id NOT IN (SELECT doc_id FROM core)
-           GROUP BY 1)
-         SELECT d.doc_id,
-                CASE WHEN c.doc_id IS NOT NULL THEN 'core'
-                     WHEN b.doc_id IS NOT NULL THEN 'border'
-                     ELSE 'noise' END AS role,
-                COALESCE(c.cluster_id, b.cluster_id, -1) AS cluster_id
-         FROM documents d
-         LEFT JOIN corelab c USING (doc_id)
-         LEFT JOIN borderlab b USING (doc_id)""",
-    "d_dedup_clusters" -> clustersOracleSql,
-    "d_clusters_stars" -> clustersOracleSql,
-    "t_fuzzy_curate" ->
-      // the same transitive-closure labels, then: survivors = unclustered
-      // docs + per-cluster minimum, quality-windowed
-      s"""WITH $clustersCteSql,
-         survivors AS (
-           SELECT doc_id FROM documents
-           WHERE doc_id NOT IN (SELECT doc_id FROM labels)
-           UNION ALL
-           SELECT doc_id FROM labels WHERE doc_id = cluster_id),
-         t AS (SELECT d.doc_id, d.lang,
-                      CAST(len(string_split(d.text, ' ')) AS INTEGER) AS n_tokens
-               FROM documents d JOIN survivors USING (doc_id))
-         SELECT doc_id, lang, n_tokens FROM t
-         WHERE n_tokens BETWEEN 20 AND 400""",
-    "t_classifier_score" ->
-      // identical hash chain per token: bucket = first-6-hex md5 % 64,
-      // weight = first-4-hex md5('w'||bucket) % 2001 − 1000; integer list
-      // sum, one IEEE division, integer sign test
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-                    FROM documents),
-         c AS (SELECT doc_id,
-                 CAST(len(toks) AS INTEGER) AS n_tokens,
-                 CAST(list_aggregate(list_transform(toks,
-                   t -> ('0x' || substr(md5('w' ||
-                          CAST(('0x' || substr(md5(t), 1, 6))::BIGINT % 64
-                               AS VARCHAR)), 1, 4))::BIGINT % 2001 - 1000),
-                   'sum') AS BIGINT) AS w_sum
-               FROM t)
-         SELECT doc_id, n_tokens, w_sum,
-                round(CAST(w_sum AS DOUBLE) / n_tokens, 6) AS score_per_token,
-                CAST(CASE WHEN w_sum > 0 THEN 1 ELSE 0 END AS INTEGER) AS keep
-         FROM c""",
-    "t_curriculum" ->
-      // identical difficulty chain (the t_classifier_score hash/weight
-      // sum), then ntile(4) per source over the shared total order
-      // (score DESC, doc_id ASC)
-      """WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS toks
-                    FROM documents),
-         c AS (SELECT doc_id, source,
-                 CAST(len(toks) AS INTEGER) AS n_tokens,
-                 CAST(list_aggregate(list_transform(toks,
-                   t -> ('0x' || substr(md5('w' ||
-                          CAST(('0x' || substr(md5(t), 1, 6))::BIGINT % 64
-                               AS VARCHAR)), 1, 4))::BIGINT % 2001 - 1000),
-                   'sum') AS BIGINT) AS w_sum
-               FROM t)
-         SELECT doc_id, source,
-                CAST(ntile(4) OVER (PARTITION BY source
-                     ORDER BY CAST(w_sum AS DOUBLE) / greatest(n_tokens, 1) DESC,
-                              doc_id ASC) AS INTEGER) AS phase,
-                round(CAST(w_sum AS DOUBLE) / greatest(n_tokens, 1), 6) AS score
-         FROM c""",
-    "t_mix_doremi" ->
-      // identical per-source integer sums; the same single-division rates,
-      // linearized multiplicative update, DECIMAL-cast share denominator
-      """WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS toks
-                    FROM documents),
-         c AS (SELECT source,
-                 CAST(len(toks) AS BIGINT) AS nt,
-                 CAST(list_aggregate(list_transform(toks,
-                   t -> ('0x' || substr(md5('w' ||
-                          CAST(('0x' || substr(md5(t), 1, 6))::BIGINT % 64
-                               AS VARCHAR)), 1, 4))::BIGINT % 2001 - 1000),
-                   'sum') AS BIGINT) AS ws
-               FROM t),
-         s AS (SELECT source, count(*) AS n_docs,
-                      CAST(sum(nt) AS BIGINT) AS n_tokens,
-                      CAST(sum(ws) AS BIGINT) AS w_sum
-               FROM c GROUP BY 1),
-         g AS (SELECT *, CAST(sum(w_sum) OVER () AS DOUBLE)
-                         / CAST(sum(n_tokens) OVER () AS DOUBLE) AS corpus_rate
-               FROM s),
-         x AS (SELECT *, greatest(CAST(w_sum AS DOUBLE) / n_tokens
-                                  - corpus_rate, 0.0) AS excess FROM g),
-         wv AS (SELECT *, CAST(CAST(n_tokens AS DOUBLE) * (1.0 + excess / 1000.0)
-                               AS DECIMAL(28,16)) AS wdec FROM x)
-         SELECT source, n_docs, n_tokens,
-                round(excess, 6) AS excess,
-                round(CAST(wdec AS DOUBLE)
-                      / CAST(sum(wdec) OVER () AS DOUBLE), 6) AS share,
-                CAST(floor(CAST(wdec AS DOUBLE)
-                      / CAST(sum(wdec) OVER () AS DOUBLE) * 100000.0)
-                     AS BIGINT) AS target_docs
-         FROM wv""",
-    "t_classifier_train" ->
-      // the identical 3 unrolled fixed-point GD rounds: 64-bucket hashed
-      // counts, the langid-vote label, pred/err/grad per round, the
-      // truncate-toward-zero update w - g // (n*1024), DECIMAL(38,0) sse
-      // -> correctly-rounded double -> the same two IEEE divisions
-      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-                     FROM documents),
-         feats AS MATERIALIZED (
-           SELECT doc_id,
-                  ('0x' || substr(md5(tok), 1, 6))::BIGINT % 64 AS bucket,
-                  count(*) AS x
-           FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
-           GROUP BY 1, 2),
-         y AS MATERIALIZED (
-           SELECT doc_id,
-                  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-           FROM documents),
-         nn AS (SELECT count(*) AS n FROM documents),
-         w0 AS MATERIALIZED (
-           SELECT DISTINCT bucket, CAST(0 AS BIGINT) AS w FROM feats),
-         ${(1 to 3).map { r =>
-           s"""p$r AS (SELECT f.doc_id, CAST(sum(f.x * w.w) AS BIGINT) AS p
-                 FROM feats f JOIN w${r - 1} w USING (bucket) GROUP BY 1),
-         e$r AS MATERIALIZED (
-           SELECT y.doc_id, coalesce(p.p, 0) - y.y * 1048576 AS e
-           FROM y LEFT JOIN p$r p USING (doc_id)),
-         g$r AS (SELECT f.bucket, CAST(sum(f.x * e.e) AS BIGINT) AS g
-                 FROM feats f JOIN e$r e USING (doc_id) GROUP BY 1),
-         w$r AS MATERIALIZED (
-           SELECT w.bucket,
-                  CAST(w.w - coalesce(g.g, 0) // ((SELECT n FROM nn) * 256) AS BIGINT) AS w
-           FROM w${r - 1} w LEFT JOIN g$r g USING (bucket)),
-         m$r AS (SELECT (CAST(sum(CAST(e AS DECIMAL(38,0))
-                               * CAST(e AS DECIMAL(38,0))) AS DOUBLE)
-                         / (SELECT n FROM nn)) / 1099511627776.0 AS mse
-                 FROM e$r)"""
-         }.mkString(",\n         ")},
-         pf AS (SELECT f.doc_id, CAST(sum(f.x * w.w) AS BIGINT) AS p
-                FROM feats f JOIN w3 w USING (bucket) GROUP BY 1),
-         acc AS (SELECT CAST(count(*) FILTER
-                          ((coalesce(p.p, 0) > 524288) = (y.y = 1))
-                          AS BIGINT) AS n_correct,
-                        count(*) AS n_docs
-                 FROM y LEFT JOIN pf p USING (doc_id))
-         SELECT w1.bucket, w1.w AS w_r1, w2.w AS w_r2, w3.w AS w_r3,
-                m1.mse AS mse_r1, m2.mse AS mse_r2, m3.mse AS mse_r3,
-                acc.n_correct, acc.n_docs
-         FROM w1 JOIN w2 USING (bucket) JOIN w3 USING (bucket),
-              m1, m2, m3, acc""",
-    "t_bpe_train" ->
-      // the identical 3 unrolled merge rounds: lead-window pair counts,
-      // the (count DESC, pair ASC) top-1 pick, island-parity greedy
-      // application, absorbed-symbol drop + reindex; final per-doc
-      // ordered string_agg md5 + the three merge literals
-      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-                     FROM documents),
-         x0 AS (SELECT doc_id, toks,
-                       unnest(generate_series(1, len(toks))) AS i
-                FROM t),
-         s0 AS MATERIALIZED (
-           SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, toks[i] AS sym
-           FROM x0),
-         ${(1 to 3).map { r =>
-           s"""w$r AS MATERIALIZED (
-           SELECT doc_id, pos, sym,
-                  lead(sym) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
-           FROM s${r - 1}),
-         mr$r AS MATERIALIZED (
-           SELECT sym AS a, nxt AS b FROM w$r WHERE nxt IS NOT NULL
-           GROUP BY sym, nxt
-           ORDER BY count(*) DESC, sym ASC, nxt ASC LIMIT 1),
-         mt$r AS (SELECT doc_id, pos,
-                         row_number() OVER (PARTITION BY doc_id
-                           ORDER BY pos) AS rn
-                  FROM w$r, mr$r WHERE sym = mr$r.a AND nxt = mr$r.b),
-         ap$r AS MATERIALIZED (
-           SELECT doc_id, pos
-           FROM (SELECT doc_id, pos, pos - rn AS island FROM mt$r)
-           QUALIFY (pos - min(pos) OVER (PARTITION BY doc_id, island))
-                   % 2 = 0),
-         s$r AS MATERIALIZED (
-           SELECT s.doc_id,
-                  CAST(row_number() OVER (PARTITION BY s.doc_id
-                    ORDER BY s.pos) - 1 AS BIGINT) AS pos,
-                  CASE WHEN ia.pos IS NOT NULL
-                       THEN s.sym || '+' || mr$r.b ELSE s.sym END AS sym
-           FROM s${r - 1} s
-           LEFT JOIN ap$r ia
-             ON s.doc_id = ia.doc_id AND s.pos = ia.pos
-           LEFT JOIN (SELECT doc_id, pos + 1 AS pos FROM ap$r) ib
-             ON s.doc_id = ib.doc_id AND s.pos = ib.pos
-           CROSS JOIN mr$r
-           WHERE ib.pos IS NULL)"""
-         }.mkString(",\n         ")}
-         SELECT s.doc_id, count(*) AS n_syms,
-                md5(string_agg(s.sym, ' ' ORDER BY s.pos)) AS doc_fp,
-                (SELECT a || '+' || b FROM mr1) AS m1,
-                (SELECT a || '+' || b FROM mr2) AS m2,
-                (SELECT a || '+' || b FROM mr3) AS m3
-         FROM s3 s GROUP BY s.doc_id""",
-    "t_bpe_encode" ->
+    }, oracle =
       // the t_bpe_train machinery twice over: 3 training rounds on the
       // doc_id % 5 = 0 split (producing mr1..mr3 + the encoded split s3,
       // whose distinct symbols rank into the trained vocab), then 3
@@ -3092,8 +2943,48 @@ object TextOps {
                 (SELECT a || '+' || b FROM mr2) || ',' ||
                 (SELECT a || '+' || b FROM mr3) AS merge_table
          FROM e3 e LEFT JOIN vocab v USING (sym)
-         GROUP BY e.doc_id""",
-    "t_ccnet_bucket" ->
+         GROUP BY e.doc_id"""),
+    Query("t_ccnet_bucket", (s, dir) => {
+      // CCNet-style perplexity bucketing (Wenzek et al., LREC 2020 —
+      // public recipe): score every doc under the corpus LM, then split
+      // EACH language's docs into head / middle / tail terciles by
+      // fluency — the standard "keep head+middle, drop tail" curation
+      // gate. Fluency is the t_lm_quality chain (add-one bigram mean —
+      // decimal-accumulated, libm-free); the language is the marker-vote
+      // prediction (a model output, as in CCNet, not the gold label). The
+      // tercile is ntile(3) over (fluency DESC, doc_id) per language — a
+      // per-language sort, which IS CCNet's shape; at 100 TB the same
+      // bucket semantics comes from sampled quantile cuts
+      // (approx_percentile) instead of a full sort, with this exact
+      // formulation as the gate. Docs with < 2 tokens have no bigrams and
+      // are out of scope (inner join), as in t_lm_quality.
+      import org.apache.spark.sql.expressions.Window
+      val d = docs(s, dir)
+      val grams = d.select(col("doc_id"), explode(TextFunctions.ngrams(
+        TextFunctions.tokens(col("text")), 2)).as("pair"))
+      val bi = grams.groupBy("pair").agg(count(lit(1)).as("c12"))
+        .withColumn("w1", substring_index(col("pair"), " ", 1))
+      val ctx = bi.groupBy("w1").agg(sum("c12").as("c1"))
+      val vocab = d.select(explode(TextFunctions.tokens(col("text"))).as("tok"))
+        .agg(countDistinct(col("tok")).as("v"))
+      val lm = bi.join(ctx, "w1").crossJoin(broadcast(vocab))
+        .select(col("pair"),
+          ((col("c12") + lit(1.0)) / (col("c1") + col("v"))).as("p"))
+      val fluency = grams.join(lm, "pair")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_bigrams"),
+          (sum(col("p").cast(DecimalType(28, 16))).cast("double") /
+            count(lit(1))).as("mp_raw"))
+      val voted = d.select(col("doc_id"), predLangOf(col("text")).as("pred_lang"))
+      fluency.join(voted, "doc_id")
+        .withColumn("tercile", ntile(3).over(Window.partitionBy("pred_lang")
+          .orderBy(col("mp_raw").desc, col("doc_id").asc)))
+        .select(col("doc_id"), col("pred_lang"), col("n_bigrams"),
+          round(col("mp_raw"), 9).as("mean_p"),
+          when(col("tercile") === 1, "head")
+            .when(col("tercile") === 2, "middle")
+            .otherwise("tail").as("ppl_bucket"))
+    }, oracle =
       // the t_lm_quality LM chain (UNROUNDED mean_p — bit-identical decimal
       // sums + IEEE divisions, so the ntile sort key cannot diverge), the
       // t_langid CASE vote, and the same ntile(3) over
@@ -3138,8 +3029,49 @@ object TextOps {
                 CASE WHEN tercile = 1 THEN 'head'
                      WHEN tercile = 2 THEN 'middle'
                      ELSE 'tail' END AS ppl_bucket
-         FROM b""",
-    "t_hash_embed" ->
+         FROM b"""),
+    Query("t_hash_embed", (s, dir) => {
+      // feature-hashed document vectors (the hashing trick — Weinberger
+      // et al., ICML'09: bucket = h(token) mod D, value accumulates a
+      // ±1 sign from an INDEPENDENT hash, so collisions cancel in
+      // expectation and the "embedding" needs no trained encoder). D=64
+      // via the shared md5-bucket idiom (t_classifier_score's feature
+      // map); sign = parity of the first hex digit of md5('s'||token).
+      // This is the bridge between the text corpus and the vector
+      // surface: cheap, deterministic per-doc vectors for clustering and
+      // near-dup when no model is available. The WHOLE sparse vector
+      // gates through one canonical fingerprint (sorted "b:v" pairs, the
+      // t_render_sft lineage idiom — one flipped sign or shifted bucket
+      // fails the hash) plus its L0/L1/L2 moments and argmax bucket
+      // (ties → smallest bucket). Plan: one scan-fused explode, one
+      // (doc,bucket) hash aggregate, one doc-keyed aggregate — both
+      // map-side combinable, nothing corpus-global; at 100 TB the op is
+      // embarrassingly parallel and the output is 6 fixed-width columns
+      // per doc, never the 64-wide dense frame.
+      val bv = docs(s, dir)
+        .select(col("doc_id"),
+          explode(TextFunctions.tokens(col("text"))).as("tok"))
+        .select(col("doc_id"),
+          (conv(substring(md5(col("tok")), 1, 6), 16, 10)
+            .cast(LongType) % 64).as("b"),
+          when(conv(substring(md5(concat(lit("s"), col("tok"))), 1, 1),
+            16, 10).cast(LongType) % 2 === 0, lit(1L))
+            .otherwise(lit(-1L)).as("sgn"))
+        .groupBy("doc_id", "b").agg(sum("sgn").as("v"))
+        .filter(col("v") =!= 0)
+      bv.groupBy("doc_id").agg(
+          count(lit(1)).cast("int").as("nnz"),
+          sum(abs(col("v"))).as("l1"),
+          sum(col("v") * col("v")).as("l2sq"),
+          max(struct(col("v"), (-col("b")).as("nb"))).as("mx"),
+          md5(concat_ws(",", transform(
+            array_sort(collect_list(struct(col("b"), col("v")))),
+            x => concat(x.getField("b").cast("string"), lit(":"),
+              x.getField("v").cast("string"))))).as("vec_md5"))
+        .select(col("doc_id"), col("nnz"), col("l1"), col("l2sq"),
+          (-col("mx.nb")).as("top_bucket"), col("mx.v").as("top_v"),
+          col("vec_md5"))
+    }, oracle =
       // identical hash chain: bucket = first-6-hex md5 % 64, sign =
       // first-hex-digit parity of md5('s'||tok); per-(doc,bucket) signed
       // sums, zero-cancelled entries dropped, then the moments + argmax
@@ -3164,7 +3096,7 @@ object TextOps {
                  FROM bv GROUP BY 1)
          SELECT doc_id, nnz, l1, l2sq,
                 -((mx).nb) AS top_bucket, (mx).v AS top_v, vec_md5
-         FROM agg"""
+         FROM agg""")
   )
 
   /** Shared WITH-chain: SimHash candidate pairs closed transitively into
@@ -3190,7 +3122,7 @@ object TextOps {
                    SELECT r.node, e.dst AS comp FROM reach r JOIN edges e ON e.src = r.comp),
          labels AS (SELECT node AS doc_id, min(comp) AS cluster_id FROM reach GROUP BY 1)"""
 
-  // lazy: referenced by the `oracles` map declared above it
+  // lazy: referenced by `queries` declared above it
   private lazy val clustersOracleSql =
     s"""WITH $clustersCteSql
          SELECT doc_id, cluster_id, count(*) OVER (PARTITION BY cluster_id) AS cluster_size

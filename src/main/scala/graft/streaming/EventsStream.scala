@@ -243,7 +243,15 @@ object EventsStream {
     * event-time-ordered parquet files plus the given sentinel batches,
     * pinned to increasing synthetic mtimes, and stream them back one file
     * per trigger. `sentinels(maxUs)` returns one DataFrame per extra
-    * sentinel micro-batch, schema-identical to `batch`. */
+    * sentinel micro-batch, schema-identical to `batch`.
+    *
+    * Row order: chunks (micro-batches) follow event time, but rows inside
+    * a chunk come in shuffle-fetch order, not the table's scan order —
+    * consumers must not depend on the order of rows within one batch.
+    *
+    * Only the returned `stream/` dir stays on disk (the streaming
+    * DataFrame reads it); the intermediate `chunks/` and `stage_i/` write
+    * dirs are deleted once their files have moved. */
   private def stageChunkedReplay(spark: SparkSession, batch: DataFrame,
       nChunks: Int, sentinels: Long => Seq[DataFrame]): (String,
       org.apache.spark.sql.types.StructType, DataFrame) = {
@@ -304,6 +312,8 @@ object EventsStream {
     sentinels(maxUs).zipWithIndex.foreach { case (df, j) =>
       stage(df, nChunks + j)
     }
+    root.toFile.listFiles().filter(_.getName != "stream")
+      .foreach(org.apache.commons.io.FileUtils.forceDelete)
     (streamDir.toString, batch.schema,
       readStagedReplay(spark, streamDir.toString, batch.schema))
   }

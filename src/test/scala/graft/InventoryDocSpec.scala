@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * line — this lint keeps it TRUE: every declared query must be named
   * (backtick-quoted) somewhere in the map, so a new operator cannot land
   * without its inventory row, and a renamed query cannot leave a stale
-  * one behind. */
+  * one behind. It also lints the registry itself: the name-keyed maps
+  * SparkEntry derives would silently keep only one of two records that
+  * share a name. */
 class InventoryDocSpec extends AnyFunSuite {
 
   test("every declared query is named in README.md's coverage map") {
@@ -29,5 +31,23 @@ class InventoryDocSpec extends AnyFunSuite {
       .filterNot(n => n.startsWith("p_partkey") || n.contains("."))
     assert(stale.isEmpty,
       s"README names undeclared queries (stale rows?): ${stale.mkString(", ")}")
+  }
+
+  test("query names are unique across all modules") {
+    val dups = SparkEntry.registry.groupBy(_.name)
+      .collect { case (n, qs) if qs.size > 1 => n }.toSeq.sorted
+    assert(dups.isEmpty, s"duplicate query names: ${dups.mkString(", ")}")
+  }
+
+  test("every query has a non-blank oracle") {
+    val blank = SparkEntry.registry
+      .filter(q => q.oracle == null || q.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries without an oracle: ${blank.mkString(", ")}")
+  }
+
+  test("the inventory has 315 queries") {
+    assert(SparkEntry.registry.size == 315)
+    assert(SparkEntry.queries.size == 315)
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
   }
 }

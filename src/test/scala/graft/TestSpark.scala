@@ -8,16 +8,9 @@ import org.apache.spark.sql.SparkSession
   * so managed-table tests (rpt catalog) never touch real data. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val wh = Files.createTempDirectory("graft-warehouse").toString
-    val s = Engine.configure(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    System.setProperty("spark.sql.warehouse.dir",
+      Files.createTempDirectory("graft-warehouse").toString)
+    Engine.local(4, "graft-test")
   }
 
   def fixture(name: String): String =

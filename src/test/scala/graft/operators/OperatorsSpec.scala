@@ -96,7 +96,7 @@ class OperatorsSpec extends AnyFunSuite {
       val exact = r.getLong(r.fieldIndex("exact")).toDouble
       assert(math.abs(approx - exact) / exact <= 0.05, s"$approx vs $exact")
     }
-    val declared = graft.queries.Core.defs("q_approx_distinct")(spark, dir).collect()
+    val declared = graft.SparkEntry.queries("q_approx_distinct")(spark, dir).collect()
     assert(declared.nonEmpty)
     assert(declared.forall(r => r.getBoolean(r.fieldIndex("approx_within_10pct"))))
   }

@@ -225,7 +225,7 @@ class ScaleSpec extends AnyFunSuite {
     // partition. The claim under test: the lazily-degraded path costs
     // about what Spark's own sort-based WindowGroupLimit plan (the plan
     // it degrades TO) would have, i.e. the budget buys OOM safety without
-    // a cliff. Wall-clock asserts are kept loose (3×) for CI stability;
+    // a cliff. Wall-clock asserts are kept loose (4×) for CI stability;
     // the measured quiet-host ratio is recorded in DESIGN.md.
     import org.apache.spark.sql.GraftPlanBridge
     import org.apache.spark.sql.expressions.Window

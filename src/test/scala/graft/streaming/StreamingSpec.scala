@@ -239,4 +239,12 @@ class StreamingSpec extends AnyFunSuite {
       .groupBy("user_id").agg(count(lit(1)).as("n_events"))
     assert(finals.except(batch).count() == 0 && batch.except(finals).count() == 0)
   }
+
+  test("chunked replay staging leaves only the stream dir on disk") {
+    val (path, _) = EventsStream.stageEventsChunkedReplayFull(spark, dir, 4)
+    val stream = new java.io.File(path)
+    assert(stream.getParentFile.list().toSeq == Seq("stream"))
+    // 4 event-time chunks + 2 watermark sentinels, one file per trigger
+    assert(stream.list().count(_.endsWith(".parquet")) == 6)
+  }
 }

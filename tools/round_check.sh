@@ -1,11 +1,17 @@
 #!/usr/bin/env bash
-# Full pre-round gate: compile, tests, oracle sweeps at all SFs, bench.
+# Full pre-round gate: compile, tests (engine + perfbench), oracle sweeps
+# at all SFs, bench.
 # Usage: tools/round_check.sh [--quick]   (--quick skips sf0.1 + bench)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== compile + tests =="
 sbt -batch test 2>&1 | grep -E "Tests:|FAILED|error\]" | head -5
+
+# perfbench is its own sbt build against Engine.local / SparkEntry: build
+# and test it so an engine API change cannot break the benchmark unseen
+echo "== perfbench compile + tests =="
+(cd perfbench && sbt -batch test) 2>&1 | grep -E "Tests:|FAILED|error\]" | head -5
 
 for sf in sf0.001 sf0.01; do
   echo "== oracle sweep $sf =="
